@@ -25,27 +25,36 @@ reference file:line it re-expresses.  No code is copied from the
 reference — the algorithms are re-derived Spark-first in Python.
 """
 
+import importlib
+
 __version__ = "0.1.0"
 
-from pu4spark_spark.api import PositiveUnlabeledLearner
-from pu4spark_spark.config import (
-    GradualReductionPULearnerConfig,
-    LogisticRegressionConfig,
-    RandomForestConfig,
-    TraditionalPULearnerConfig,
-)
-from pu4spark_spark.features import assemble_features
-from pu4spark_spark.gradual import GradualReductionPULearner
-from pu4spark_spark.traditional import TraditionalPULearner
+#: public name → defining module.  Imported on first access (PEP 562), so
+#: ``import pu4spark_spark`` loads no PySpark: Spark's Python worker
+#: daemon (``pu4spark_spark._daemon``) must run before anything imports
+#: PySpark, and a worker importing one submodule skips the rest.
+_LAZY = {
+    "GradualReductionPULearner": "pu4spark_spark.gradual",
+    "GradualReductionPULearnerConfig": "pu4spark_spark.config",
+    "LogisticRegressionConfig": "pu4spark_spark.config",
+    "PositiveUnlabeledLearner": "pu4spark_spark.api",
+    "RandomForestConfig": "pu4spark_spark.config",
+    "TraditionalPULearner": "pu4spark_spark.traditional",
+    "TraditionalPULearnerConfig": "pu4spark_spark.config",
+    "assemble_features": "pu4spark_spark.features",
+}
 
-__all__ = [
-    "GradualReductionPULearner",
-    "GradualReductionPULearnerConfig",
-    "LogisticRegressionConfig",
-    "PositiveUnlabeledLearner",
-    "RandomForestConfig",
-    "TraditionalPULearner",
-    "TraditionalPULearnerConfig",
-    "assemble_features",
-    "__version__",
-]
+__all__ = [*_LAZY, "__version__"]
+
+
+def __getattr__(name: str):
+    module = _LAZY.get(name)
+    if module is None:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    value = getattr(importlib.import_module(module), name)
+    globals()[name] = value
+    return value
+
+
+def __dir__() -> list[str]:
+    return sorted({*globals(), *_LAZY})

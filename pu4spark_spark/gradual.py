@@ -29,6 +29,8 @@ Scale deltas vs the reference (behavior-neutral, SURVEY.md §4):
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -41,6 +43,8 @@ from pu4spark_spark.labels import (
     relabel_keep,
 )
 from pu4spark_spark.two_step import VEC_FEATURES_NAME, TwoStepPULearner
+
+logger = logging.getLogger(__name__)
 
 #: safety bound the reference lacks — its loop-variant argument (strictly
 #: shrinking gain) guarantees termination mathematically, but at scale we
@@ -123,6 +127,13 @@ class GradualReductionPULearner(TwoStepPULearner):
             ):  # :84
                 break
             if iteration >= MAX_SAFE_ITERS:
+                logger.warning(
+                    "GradualReductionPULearner stopped at MAX_SAFE_ITERS=%d "
+                    "before converging: gain %d (previous %s), %d positives, "
+                    "%d reliable negatives",
+                    MAX_SAFE_ITERS, cur_gain, prev_gain, total_pos,
+                    total_rel_neg,
+                )
                 break
 
         if keep_internal:

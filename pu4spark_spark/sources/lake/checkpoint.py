@@ -42,6 +42,7 @@ snapshot-manifest log.
 from __future__ import annotations
 
 import json
+import logging
 import os
 
 from pu4spark_spark.sources.lake.protocol import (
@@ -53,6 +54,8 @@ from pu4spark_spark.sources.lake.protocol import (
     _tombstones_of,
     _write_atomic,
 )
+
+logger = logging.getLogger(__name__)
 
 #: stats keys whose values are per-shard MAPS (merged per shard name);
 #: every other key is a per-shard zonemap entry merged flat
@@ -74,13 +77,19 @@ def _maybe_auto_checkpoint(
     """Fire the sticky-interval checkpoint after a commit.  BEST
     EFFORT by design: the commit already succeeded and the checkpoint
     is derived metadata, so a failure here (e.g. a racing writer
-    claimed the same checkpoint) must never fail the write job."""
+    claimed the same checkpoint) must never fail the write job.  It is
+    logged, so a broken checkpoint path does not quietly leave readers
+    an ever-growing delta tail."""
+    n = manifest.get(CKPT_INTERVAL_KEY)
+    if not (isinstance(n, int) and n > 0 and version % n == 0):
+        return
     try:
-        n = manifest.get(CKPT_INTERVAL_KEY)
-        if isinstance(n, int) and n > 0 and version % n == 0:
-            write_checkpoint(path)
-    except Exception:
-        pass
+        write_checkpoint(path)
+    except Exception as exc:
+        logger.warning(
+            "lake auto-checkpoint of %s at version %d failed with %s: %s",
+            path, version, type(exc).__name__, exc, exc_info=True,
+        )
 
 #: stats FAMILY → checkpoint parquet columns it needs (besides "file");
 #: the planner passes exactly the families its pushed filters consult,

@@ -444,3 +444,30 @@ def test_merge_preserves_other_shards_family_stats(spark, tmp_path):
     for f, ent in pre_cols.items():
         assert post.get(f) == ent, f"merge dropped _cols for {f}"
     assert len(post) > len(pre_cols)
+
+
+def test_auto_checkpoint_failure_is_logged_not_raised(
+    monkeypatch, caplog, tmp_path
+):
+    """A failed auto-checkpoint leaves the commit standing but is logged
+    with the table path, the version and the exception type."""
+    from pu4spark_spark.sources.lake import checkpoint
+    from pu4spark_spark.sources.lake.checkpoint import (
+        CKPT_INTERVAL_KEY,
+        _maybe_auto_checkpoint,
+    )
+
+    def broken(path):
+        raise PermissionError("read-only table root")
+
+    monkeypatch.setattr(checkpoint, "write_checkpoint", broken)
+    out = str(tmp_path / "t")
+    with caplog.at_level("WARNING", logger=checkpoint.__name__):
+        _maybe_auto_checkpoint(out, 3, {CKPT_INTERVAL_KEY: 2})  # not due
+        assert caplog.records == []
+        _maybe_auto_checkpoint(out, 4, {CKPT_INTERVAL_KEY: 2})
+    (record,) = caplog.records
+    assert record.levelname == "WARNING"
+    message = record.getMessage()
+    assert out in message and "version 4" in message
+    assert "PermissionError" in message

@@ -77,6 +77,31 @@ def test_gradual_separates(cloud):
     assert means[True] > means[False]
 
 
+def test_gradual_logs_when_the_iteration_cap_stops_it(
+    spark, monkeypatch, caplog
+):
+    """Overlapping blobs keep demoting reliable negatives, so a cap of two
+    iterations stops the loop before it converges, and says so."""
+    from pu4spark_spark import gradual
+
+    rng = random.Random(7)
+    rows = [
+        (i, [rng.gauss(c, 1.0), rng.gauss(c, 1.0)],
+         int(c > 0 and rng.random() < 0.3))
+        for i, c in enumerate([1.0, -1.0] * 100)
+    ]
+    df = spark.createDataFrame(rows, ["id", "features", "label"])
+    monkeypatch.setattr(gradual, "MAX_SAFE_ITERS", 2)
+    learner = GradualReductionPULearnerConfig(
+        relNegThreshold=0.5, classifierConfig=LogisticRegressionConfig()
+    ).build()
+    with caplog.at_level("WARNING", logger=gradual.__name__):
+        out = learner.weight(df, "label", "features", "finalLabel")
+    assert out.count() == 200
+    (record,) = caplog.records
+    assert "MAX_SAFE_ITERS=2" in record.getMessage()
+
+
 def test_deterministic_lr(cloud):
     cfg = TraditionalPULearnerConfig(maxIters=1)
     a = cfg.build().weight(cloud, "label", "features").orderBy("id").collect()
