@@ -490,6 +490,27 @@ def _probe_protobuf() -> bool:
         return False
 
 
+def one_line(out: dict, per_query: dict, budget: int = 1850) -> str:
+    """``out`` as one compact JSON line of at most ``budget`` chars: its
+    ``queries`` gets the entries of ``per_query`` in order while they
+    fit, and ``queries_omitted`` (counted in the budget) says how many
+    did not."""
+    out = dict(out, queries={})
+    for name, secs in per_query.items():
+        out["queries"][name] = secs
+        omitted = len(per_query) - len(out["queries"])
+        if omitted:
+            out["queries_omitted"] = omitted
+        else:
+            out.pop("queries_omitted", None)
+        if len(json.dumps(out, separators=(",", ":"))) > budget:
+            # back to the previous entry count, checked with this key
+            del out["queries"][name]
+            out["queries_omitted"] = omitted + 1
+            break
+    return json.dumps(out, separators=(",", ":"))
+
+
 def main() -> None:
     spark = get_spark(app_name="pu4spark_bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -798,13 +819,7 @@ def main() -> None:
             max(ck_vals) if ck_vals else None,
         ],
     }
-    for name, secs in per_query.items():
-        out["queries"][name] = secs
-        if len(json.dumps(out, separators=(",", ":"))) > 1850:
-            del out["queries"][name]
-            out["queries_omitted"] = len(per_query) - len(out["queries"])
-            break
-    print(json.dumps(out, separators=(",", ":")))
+    print(one_line(out, per_query))
 
 
 if __name__ == "__main__":

@@ -26,8 +26,18 @@ reference — the algorithms are re-derived Spark-first in Python.
 """
 
 import importlib
+import sys
 
 __version__ = "0.1.0"
+
+# a Spark Python worker under the stock daemon drops pyspark.zip & co.
+# from its path here (see ``_daemon``).  PySpark is never loaded yet
+# under ``python -m pu4spark_spark._daemon``, which must not find its
+# own module imported before it runs.
+if "pyspark" in sys.modules:
+    from pu4spark_spark._daemon import prune_in_worker
+
+    prune_in_worker()
 
 #: public name → defining module.  Imported on first access (PEP 562), so
 #: ``import pu4spark_spark`` loads no PySpark: Spark's Python worker

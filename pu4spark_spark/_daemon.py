@@ -18,6 +18,16 @@ before PySpark is imported, then hands over to
 :func:`pyspark.daemon.manager`.  Forked workers inherit the cleaned path,
 and the per-task cache invalidation costs next to nothing.
 
+Spark starts some workers under the stock daemon whatever the conf says:
+the Python data source's planner workers (schema, filter pushdown, read
+planning, write, commit), and every worker of a session that
+:func:`~pu4spark_spark.session.get_spark` did not build.  Those
+workers have already imported PySpark from ``pyspark.zip``, so
+:func:`prune_in_worker`, which the package's ``__init__`` calls, prunes
+at their first ``import pu4spark_spark``.  A planner worker is reused
+for every later call of its kind, and each call's invalidation drops
+from 170-240 ms (17 zip importers) to under 0.1 ms.
+
 The rule (:func:`archives_to_drop`): an archive leaves the path only if
 every top-level Python package it provides then resolves to a directory
 entry whose ``<package>/version.py`` declares the same ``__version__``.
@@ -35,6 +45,7 @@ import os
 import re
 import sys
 import zipfile
+import zipimport
 
 _VERSION = re.compile(
     r"""^__version__\s*(?::[^=\n]*)?=\s*['"]([^'"]+)['"]""", re.M
@@ -146,6 +157,24 @@ def prune_archives(
         for key in [k for k in cache if k == entry or k.startswith(inside)]:
             del cache[key]
     return dropped
+
+
+def prune_in_worker() -> list[str]:
+    """:func:`prune_archives` in a Spark Python worker (it carries
+    ``PYTHON_WORKER_FACTORY_SECRET``; the driver does not) that has
+    already imported PySpark from an archive; else nothing.
+
+    Runs at a worker's first ``import pu4spark_spark``.  Under this
+    module's own daemon PySpark is not loaded yet at that point, and
+    :func:`main` prunes instead.  Modules already imported stay loaded,
+    and a later ``pyspark`` submodule import still resolves through
+    ``pyspark.__path__`` into the same archive."""
+    pyspark = sys.modules.get("pyspark")
+    if "PYTHON_WORKER_FACTORY_SECRET" not in os.environ or not isinstance(
+        getattr(pyspark, "__loader__", None), zipimport.zipimporter
+    ):
+        return []
+    return prune_archives()
 
 
 def main() -> None:

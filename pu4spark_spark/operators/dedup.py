@@ -806,6 +806,18 @@ def connected_components(pairs: DataFrame, max_iters: int = 50) -> DataFrame:
     return labels.select("doc_id", F.col("label").alias("cluster_id"))
 
 
+def _edge_set_diff(new_edges: DataFrame, edges: DataFrame) -> DataFrame:
+    """The symmetric difference of two distinct ``(a, b)`` edge sets, in
+    ONE join: a full-outer row with either side NULL is precisely an
+    element of the diff.  The previous two-subtract form cost 4
+    exchanges + a union per round; this is 2."""
+    return (
+        new_edges.withColumn("__n", F.lit(1))
+        .join(edges.withColumn("__o", F.lit(1)), ["a", "b"], "full_outer")
+        .filter(F.col("__n").isNull() | F.col("__o").isNull())
+    )
+
+
 def connected_components_star(
     pairs: DataFrame,
     max_iters: int = 30,
@@ -881,21 +893,7 @@ def connected_components_star(
         )
         new_edges = cached(small.localCheckpoint(eager=False))
         rounds += 1
-        # exact symmetric-diff emptiness in ONE join: both sides are
-        # distinct sets, so a full-outer row with either side NULL is
-        # precisely an element of the diff.  The previous two-subtract
-        # form cost 4 exchanges + a union per round; this is 2.
-        changed = (
-            new_edges.withColumn("__n", F.lit(1))
-            .join(
-                edges.withColumn("__o", F.lit(1)),
-                ["a", "b"],
-                "full_outer",
-            )
-            .filter(F.col("__n").isNull() | F.col("__o").isNull())
-            .limit(1)
-            .count()
-        )
+        changed = _edge_set_diff(new_edges, edges).limit(1).count()
         persisted.unpersist()
         persisted = new_edges
         edges = new_edges

@@ -11,7 +11,9 @@ import json
 import os
 import subprocess
 import sys
+import types
 import zipfile
+import zipimport
 
 import pytest
 from pyspark import SparkContext
@@ -116,6 +118,40 @@ def test_drops_a_jar_without_python_packages(tmp_path):
     assert cache == {}
 
 
+def _hook_calls(monkeypatch, tmp_path, *, marker, pyspark):
+    """How often :func:`_daemon.prune_in_worker` prunes, with or without
+    the worker marker, given the loaded ``pyspark`` module (None: not
+    loaded; "zip": loaded from an archive; "dir": from a directory)."""
+    calls = []
+    monkeypatch.setattr(_daemon, "prune_archives", lambda: calls.append(1))
+    if marker:
+        monkeypatch.setenv("PYTHON_WORKER_FACTORY_SECRET", "secret")
+    else:
+        monkeypatch.delenv("PYTHON_WORKER_FACTORY_SECRET", raising=False)
+    if pyspark is None:
+        monkeypatch.delitem(sys.modules, "pyspark", raising=False)
+    elif pyspark == "zip":
+        archive = _zip_install(tmp_path / "pyspark.zip", "pyspark", "4.1.2")
+        module = types.ModuleType("pyspark")
+        module.__loader__ = zipimport.zipimporter(archive)
+        monkeypatch.setitem(sys.modules, "pyspark", module)
+    _daemon.prune_in_worker()
+    return len(calls)
+
+
+def test_worker_hook_prunes_only_in_a_worker(monkeypatch, tmp_path):
+    assert _hook_calls(monkeypatch, tmp_path, marker=False, pyspark="zip") == 0
+    assert _hook_calls(monkeypatch, tmp_path, marker=True, pyspark="zip") == 1
+
+
+def test_worker_hook_needs_pyspark_loaded_from_an_archive(
+    monkeypatch, tmp_path
+):
+    # the package's own daemon imports the package before PySpark
+    assert _hook_calls(monkeypatch, tmp_path, marker=True, pyspark=None) == 0
+    assert _hook_calls(monkeypatch, tmp_path, marker=True, pyspark="dir") == 0
+
+
 def test_package_import_is_lazy():
     code = (
         "import sys, pu4spark_spark\n"
@@ -127,6 +163,17 @@ def test_package_import_is_lazy():
         text=True, check=True,
     )
     assert out.stdout.strip() == "[]"
+
+
+def test_package_import_leaves_the_daemon_module_to_run_as_main():
+    """``python -m pu4spark_spark._daemon`` imports the package first;
+    had that imported ``_daemon`` too, runpy would warn and run it twice."""
+    out = subprocess.run(
+        [sys.executable, "-c",
+         "import sys, pu4spark_spark; print(sorted(sys.modules))"],
+        cwd=ROOT, capture_output=True, text=True, check=True,
+    )
+    assert "pu4spark_spark._daemon" not in out.stdout
 
 
 def test_every_public_name_resolves():
@@ -161,7 +208,8 @@ def test_workers_import_package_follows_cwd_and_pythonpath(
 
 #: run in a fresh interpreter: build a ``get_spark`` session, then report
 #: from Python workers where they imported PySpark from.  argv[1] == "1"
-#: also reads the jsonl_docs table and a probe data source.
+#: also reads the jsonl_docs table and a probe data source, and has a
+#: planner worker report after importing the package (``planner``).
 PROBE = r'''
 import json, sys, zipimport
 sys.path.insert(0, sys.argv[2])
@@ -199,6 +247,31 @@ class WorkerProbeReader(DataSourceReader):
     def read(self, partition):
         yield (report(),)
 
+class PlannerProbe(DataSource):
+    @classmethod
+    def name(cls):
+        return "planner_probe"
+
+    def schema(self):
+        return "report string"
+
+    def reader(self, schema):
+        return PlannerProbeReader()
+
+class PlannerProbeReader(DataSourceReader):
+    def partitions(self):
+        # runs in a read-planning worker, under the stock daemon
+        import importlib, time
+        import pu4spark_spark
+        start = time.perf_counter()
+        importlib.invalidate_caches()
+        seconds = time.perf_counter() - start
+        out = dict(json.loads(report()), invalidate_caches_s=seconds)
+        return [InputPartition(json.dumps(out))]
+
+    def read(self, partition):
+        yield (partition.value,)
+
 spark = get_spark(master="local[2]", shuffle_partitions=2)
 spark.sparkContext.setLogLevel("ERROR")
 conf = spark.sparkContext.getConf()
@@ -219,6 +292,11 @@ if sys.argv[1] == "1":
     reports += docs.select(probe("doc_id")).collect()
     spark.dataSource.register(WorkerProbe)
     reports += spark.read.format("worker_probe").load().collect()
+    spark.dataSource.register(PlannerProbe)
+    out["planner"] = [
+        json.loads(r[0])
+        for r in spark.read.format("planner_probe").load().collect()
+    ]
 out["workers"] = sorted({r[0] for r in reports})
 spark.stop()
 print(json.dumps(out))
@@ -255,6 +333,17 @@ def test_workers_import_pyspark_from_its_directory_install(tmp_path):
         )
         assert os.path.isfile(worker["pyspark"]), worker  # not in an archive
         assert worker["zipimporters"] == 0, worker
+
+
+def test_planner_worker_prunes_archives_at_package_import(tmp_path):
+    """Spark starts the data source's planner workers under the stock
+    daemon whatever the conf says; importing the package there drops the
+    archives, so the per-call cache invalidation is cheap."""
+    (planner,) = _run_probe(tmp_path, cwd=ROOT, lake=True)["planner"]
+    assert planner["main"].endswith(os.path.join("pyspark", "daemon.py"))
+    assert not os.path.isfile(planner["pyspark"]), planner  # from the zip
+    assert planner["zipimporters"] == 0, planner
+    assert planner["invalidate_caches_s"] < 0.005, planner
 
 
 def test_stock_daemon_when_workers_cannot_import_the_package(tmp_path):

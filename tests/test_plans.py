@@ -7,7 +7,7 @@ from __future__ import annotations
 import re
 
 from pu4spark_spark.operators.asof import q_range_click_purchases
-from pu4spark_spark.operators.dedup import q_dedup_exact_docs
+from pu4spark_spark.operators.dedup import _edge_set_diff, q_dedup_exact_docs
 from pu4spark_spark.operators.relational import (
     q_q1_pricing_summary,
     q_q5_region_supplier_revenue,
@@ -51,6 +51,17 @@ def test_exact_dedup_single_shuffle(spark):
     # details; count the detail headers
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1
     assert "partial_" in plan  # map-side combine happened
+
+
+def test_cc_star_convergence_probe_is_one_full_outer_join(spark):
+    """The CC-star loop's per-round probe (the symmetric diff of the old
+    and new edge sets) is one full-outer join: 2 exchanges, where the
+    two-subtract form it replaced had 4."""
+    new = spark.createDataFrame([(2, 1), (3, 1)], "a long, b long")
+    old = spark.createDataFrame([(2, 1), (3, 2)], "a long, b long")
+    plan = explain_str(_edge_set_diff(new, old))
+    assert re.findall(r"Join type: (\w+)", plan) == ["FullOuter"]
+    assert len(re.findall(r"\(\d+\) Exchange", plan)) <= 2
 
 
 def test_no_row_udfs_anywhere():
