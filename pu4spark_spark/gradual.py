@@ -34,15 +34,13 @@ import logging
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pu4spark_spark.config import INDEXED_FEATURES_NAME, LABEL_NAME
 from pu4spark_spark.labels import (
     REL_NEG_LABEL,
     UNDEF_LABEL,
     binarize_gradual,
     iteration_stats,
-    relabel_keep,
 )
-from pu4spark_spark.two_step import VEC_FEATURES_NAME, TwoStepPULearner
+from pu4spark_spark.two_step import TwoStepPULearner
 
 logger = logging.getLogger(__name__)
 
@@ -53,10 +51,13 @@ MAX_SAFE_ITERS = 100
 
 
 class GradualReductionPULearner(TwoStepPULearner):
-    """Converging positive-set refinement ("PU-LEA")."""
+    """Converging positive-set refinement ("PU-LEA").
 
-    def __init__(self, rel_neg_threshold: float, classifier):
-        super().__init__(rel_neg_threshold, classifier)
+    ``weight`` leaves ``trace_``: one dict per stats pass (the pre-loop
+    pass is iteration 1) holding ``iteration``, the five
+    :func:`~pu4spark_spark.labels.iteration_stats` counts and
+    ``cur_gain``, the loop variant of the do-while (:80-84).
+    """
 
     def weight(
         self,
@@ -66,11 +67,7 @@ class GradualReductionPULearner(TwoStepPULearner):
         final_label: str = "finalLabel",
         keep_internal: bool = False,
     ) -> DataFrame:
-        cur_df = self.zero_step(df, label_col, features_col, final_label)
-        cur_df = cur_df.drop(LABEL_NAME)
-        cur_df = relabel_keep(cur_df, label_col, "prevLabel", UNDEF_LABEL).withColumn(
-            "prevLabel", F.col("prevLabel").cast("int")
-        )
+        cur_df = self.seed_labels(df, label_col, features_col, final_label)
 
         # first thresholding pass over unlabeled rows (:35-40)
         cur_df = cur_df.withColumn(
@@ -92,6 +89,7 @@ class GradualReductionPULearner(TwoStepPULearner):
 
         prev_gain = float("inf")  # Long.MaxValue at :51
         cur_gain = new_rel_neg
+        self.trace_ = [{"iteration": 1, **stats, "cur_gain": cur_gain}]
 
         iteration = 1
         while True:  # do-while (:54-84)
@@ -119,6 +117,9 @@ class GradualReductionPULearner(TwoStepPULearner):
             new_rel_neg = stats["total_rel_neg"]  # (cur==0), :75-78
             total_rel_neg = stats["total_rel_neg"]  # identical filter, :79
             prev_gain, cur_gain = cur_gain, prev_new_rel_neg - total_rel_neg  # :80-81
+            self.trace_.append(
+                {"iteration": iteration, **stats, "cur_gain": cur_gain}
+            )
 
             if not (
                 cur_gain > 0
@@ -136,13 +137,4 @@ class GradualReductionPULearner(TwoStepPULearner):
                 )
                 break
 
-        if keep_internal:
-            return cur_df
-        return self.cleanup(
-            cur_df,
-            "prevLabel",
-            "curLabel",
-            INDEXED_FEATURES_NAME,
-            VEC_FEATURES_NAME,
-            LABEL_NAME,
-        )
+        return self.finish(cur_df, keep_internal)

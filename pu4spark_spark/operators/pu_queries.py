@@ -3,7 +3,11 @@
 Relational pieces of the reference's algorithms (relabel, both binarize
 expressions, fused iteration stats, label cast) are SQL-expressible and
 get DuckDB oracles; the ML pieces (zero step / full learners) are
-rows-only checks.
+rows-only checks.  The ``pu_*_trace`` queries for the Traditional,
+Gradual, bagging and spy learners run the shipped ``weight()`` with only
+the classifier (and any random coin) swapped for a deterministic
+integer-hash scorer, so DuckDB checks the real loop; the two loop
+learners' traces are their own ``trace_`` records.
 
 The binarize oracles need a probability column that both engines compute
 identically; we use an exact integer pseudo-score
@@ -138,34 +142,53 @@ FROM cur
 """
 
 
-#: iteration-trace scorer: the per-round additive term makes the score
-#: "retrain" between iterations 1-3 and FREEZE from iteration 3 on
-#: (min(i,3)), so a Traditional trace mines new negatives for three
-#: rounds and then hits the reference's new_rel_neg==0 early exit
-#: (TraditionalPULearner.scala:53-55) strictly inside the bound —
-#: both loop clauses get driver-witnessed.  Still overflow-free:
-#: (PREMOD-1)*KNUTH + 3*9176 < 2^52.
+#: trace scorer: round ``r`` scores with the Knuth hash shifted by
+#: ``r * _TRACE_STEP``.  The loop traces use round ``min(r, 3)``, so the
+#: score "retrains" between rounds 1-3 and FREEZES from round 3 on: a
+#: Traditional trace mines new negatives for three rounds and then hits
+#: the reference's new_rel_neg==0 early exit
+#: (TraditionalPULearner.scala:53-55), and a Gradual trace demotes
+#: nothing at round 4, so its gain drops to 0 and the do-while ends.
+#: Both loops stop by round 4, strictly inside ``_TRACE_MAX_ITERS``.
+#: Overflow-free: (PREMOD-1)*KNUTH + 7*9176 < 2^52.
 _TRACE_STEP = 9176
 _TRACE_MAX_ITERS = 8
+_TRACE_FREEZE = 3
 
 
-def _trace_p_col(i: int) -> F.Column:
-    k = min(i, 3)
+def _bag_p_col(t: int) -> F.Column:
     return (
         (
             (F.col("vec_id") % F.lit(_PREMOD)) * F.lit(_KNUTH)
-            + F.lit(k * _TRACE_STEP)
+            + F.lit(t * _TRACE_STEP)
         )
         % F.lit(1000)
     ) / F.lit(1000.0)
 
 
-def _trace_p_sql(i: int) -> str:
-    k = min(i, 3)
+def _bag_p_sql(t: int) -> str:
     return (
-        f"(((vec_id % {_PREMOD}) * {_KNUTH} + {k * _TRACE_STEP}) % 1000)"
-        " / 1000.0"
+        f"((((vec_id % {_PREMOD}) * {_KNUTH} + {t * _TRACE_STEP}) % 1000)"
+        " / 1000.0)"
     )
+
+
+class _KnuthRounds:
+    """Scorer substitution for the two loop learners: step 0 is round
+    1, each fit starts the next round, and round ``r`` scores every row
+    with ``_bag_p_col(min(r, 3))``.  Every other line of ``weight()``
+    is the production learner's."""
+
+    def zero_step(self, df, label_col, features_col, final_label):
+        self._round = 1
+        return df.withColumn(final_label, _bag_p_col(1))
+
+    def fit_on_current(self, df, cur_col):
+        self._round += 1
+        return min(self._round, _TRACE_FREEZE)
+
+    def score_all(self, model, df, final_label):
+        return df.withColumn(final_label, _bag_p_col(model))
 
 
 _TRACE_SCHEMA = (
@@ -176,70 +199,47 @@ _TRACE_SCHEMA = (
 
 def q_pu_traditional_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Traditional PU loop's CONVERGENCE TRACE, driver-hash-checked:
-    one row per executed iteration of the exact reference protocol
-    (TraditionalPULearner.scala:42-74) — relabel seed, per-iteration
-    ``binarize_traditional`` mining, the fused ``iteration_stats`` agg
-    (labels.py:131-161, replacing the reference's up-to-5 count jobs),
-    the curLabel→prevLabel roll, and the ``new_rel_neg == 0`` early
-    exit (:53-55) — driven by a deterministic integer-hash scorer
-    instead of the LR fit, so every scalar in the trace is exactly
-    SQL-expressible and DuckDB replays the whole loop (the ML-scored
-    twin ``pu_traditional_lr`` stays rows-only + pytest golden hashes;
-    this query witnesses the LOOP ALGEBRA itself).
+    the shipped ``TraditionalPULearner.weight()`` runs with the
+    ``_KnuthRounds`` scorer in place of the classifier, and the query
+    returns its ``trace_`` — one row per executed iteration of the
+    reference protocol (TraditionalPULearner.scala:42-74): relabel seed,
+    ``binarize_traditional`` mining, the fused ``iteration_stats`` agg,
+    the curLabel→prevLabel roll and the ``new_rel_neg == 0`` early exit
+    (:53-55).  Every count is exactly SQL-expressible, so DuckDB replays
+    the whole loop; the scorer freezes at round 3, so the trace's last
+    row carries ``new_rel_neg = 0``.  The ML-scored twin
+    ``pu_traditional_lr`` stays rows-only."""
+    from pu4spark_spark.traditional import TraditionalPULearner
 
-    Scale shape = the real learner's: per iteration, ONE full-scan agg
-    reduced to a single driver row (the driver protocol every bounded
-    loop in this repo uses); the trace is ≤ ``_TRACE_MAX_ITERS`` rows
-    assembled from those scalars.  The scorer freezes at iteration 3,
-    so mining provably dries up and the early exit fires inside the
-    bound — the trace's last row carries ``new_rel_neg = 0``."""
-    emb = load_table(spark, "embeddings", sf_dir)
-    df = emb.withColumn(
-        "pu_label", F.when(F.col("label") == 9, F.lit(1.0)).otherwise(F.lit(0.0))
-    )
-    cur_df = relabel_keep(df, "pu_label", "prevLabel", UNDEF_LABEL).withColumn(
-        "prevLabel", F.col("prevLabel").cast("int")
-    )
-    trace: list[tuple] = []
-    for i in range(1, _TRACE_MAX_ITERS + 1):
-        cur_df = cur_df.withColumn(
-            "curLabel",
-            binarize_traditional(_trace_p_col(i), F.col("prevLabel"), 0.5),
-        )
-        row = iteration_stats_df(cur_df).collect()[0]
-        trace.append(
-            (
-                i,
-                int(row["new_rel_neg"] or 0),
-                int(row["total_pos"]),
-                int(row["total_rel_neg"]),
-                int(row["total_undef"]),
-                int(row["total_rows"]),
-            )
-        )
-        if trace[-1][1] == 0:  # early exit (:53-55)
-            break
-        cur_df = cur_df.drop("prevLabel").withColumnRenamed(
-            "curLabel", "prevLabel"
-        )
-    return spark.createDataFrame(trace, _TRACE_SCHEMA)
+    class _TraceTraditional(_KnuthRounds, TraditionalPULearner):
+        pass
+
+    learner = _TraceTraditional(0.5, _TRACE_MAX_ITERS, None)
+    learner.weight(_pu_input(spark, sf_dir), "pu_label", "embedding")
+    return spark.createDataFrame(learner.trace_, _TRACE_SCHEMA)
 
 
-def _sql_traditional_trace() -> str:
-    # unrolled CTE chain: prev_1 = relabel seed; cur_i = binarize(p_i,
-    # prev_i); prev_{i+1} = cur_i.  The early exit is replayed by
-    # keeping iterations up to and including the FIRST new_rel_neg=0.
+def _sql_trace_rows(gradual: bool) -> str:
+    # unrolled CTE chain: s1 = relabel seed; c_i = binarize(p_i, s_i)
+    # over UNDEF rows (Traditional; Gradual's first pass) or REL_NEG
+    # rows (Gradual's demote passes); s_{i+1} = c_i's labels.  ``trace``
+    # holds the five counts of every c_i; the callers cut it where the
+    # loop stops.
     ctes = [
-        "it1 AS (SELECT vec_id, CASE WHEN label = 9 THEN 1 ELSE -1 END"
+        "s1 AS (SELECT vec_id, CASE WHEN label = 9 THEN 1 ELSE -1 END"
         " AS prev FROM embeddings)"
     ]
     stats = []
     for i in range(1, _TRACE_MAX_ITERS + 1):
+        consider = REL_NEG_LABEL if gradual and i > 1 else UNDEF_LABEL
+        p = _bag_p_sql(min(i, _TRACE_FREEZE))
         ctes.append(
-            f"c{i} AS (SELECT vec_id, prev, CAST(CASE WHEN prev = -1 THEN"
-            f" CASE WHEN {_trace_p_sql(i)} < 0.5 THEN 0 ELSE -1 END"
-            f" ELSE prev END AS INTEGER) AS cur FROM it{i})"
+            f"c{i} AS (SELECT vec_id, prev, CAST(CASE WHEN prev = {consider}"
+            f" THEN CASE WHEN {p} < 0.5 THEN 0 ELSE -1 END"
+            f" ELSE prev END AS INTEGER) AS cur FROM s{i})"
         )
+        if i < _TRACE_MAX_ITERS:
+            ctes.append(f"s{i + 1} AS (SELECT vec_id, cur AS prev FROM c{i})")
         stats.append(
             f"SELECT {i} AS iteration,"
             " CAST(SUM(CASE WHEN prev = -1 AND cur = 0 THEN 1 ELSE 0 END)"
@@ -252,14 +252,13 @@ def _sql_traditional_trace() -> str:
             " AS total_undef,"
             f" COUNT(*) AS total_rows FROM c{i}"
         )
-        if i < _TRACE_MAX_ITERS:
-            ctes.append(
-                f"it{i + 1} AS (SELECT vec_id, cur AS prev FROM c{i})"
-            )
-    union = " UNION ALL ".join(stats)
-    return f"""
-WITH {", ".join(ctes)},
-trace AS ({union})
+    return f"{', '.join(ctes)}, trace AS ({' UNION ALL '.join(stats)})"
+
+
+# the early exit is replayed by keeping iterations up to and including
+# the FIRST new_rel_neg=0
+SQL_PU_TRADITIONAL_TRACE = f"""
+WITH {_sql_trace_rows(gradual=False)}
 SELECT iteration, new_rel_neg, total_pos, total_rel_neg, total_undef,
        total_rows
 FROM (
@@ -272,132 +271,36 @@ WHERE min_prev_mined > 0
 """
 
 
-SQL_PU_TRADITIONAL_TRACE = _sql_traditional_trace()
-
-
 def q_pu_gradual_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Gradual-Reduction loop's convergence trace, driver-hash-
-    checked: the exact PU-LEA protocol
-    (GradualReductionPULearner.scala:27-86) — first thresholding over
-    UNLABELED rows, then per-round demote-rethresholding of the
-    previously-reliable negatives (``label_to_consider=REL_NEG``), the
-    fused stats agg, and the verbatim 3-clause do-while condition
-    ``cur_gain > 0 AND cur_gain < prev_gain AND total_pos <
-    total_rel_neg`` (:84) — under the same deterministic hash scorer
-    as ``pu_traditional_trace`` (the ML twin ``pu_gradual_lr`` stays
-    rows-only).  One extra column: ``cur_gain``, the loop-variant the
-    reference's termination argument rests on.
+    checked: the shipped ``GradualReductionPULearner.weight()`` runs
+    with the ``_KnuthRounds`` scorer, and the query returns its
+    ``trace_`` — the PU-LEA protocol (GradualReductionPULearner.scala:
+    27-86): first thresholding over UNLABELED rows, then per-round
+    demote-rethresholding of the previously-reliable negatives
+    (``label_to_consider=REL_NEG``), the fused stats agg, and the
+    verbatim 3-clause do-while condition ``cur_gain > 0 AND cur_gain <
+    prev_gain AND total_pos < total_rel_neg`` (:84).  One extra column:
+    ``cur_gain``, the loop variant the reference's termination argument
+    rests on.  The ML twin ``pu_gradual_lr`` stays rows-only."""
+    from pu4spark_spark.gradual import GradualReductionPULearner
 
-    The per-round re-randomized scorer halves the reliable-negative
-    set each round, so the gains shrink strictly until ``total_pos <
-    total_rel_neg`` fails — the trace witnesses all three clauses'
-    algebra inside the ``_TRACE_MAX_ITERS`` bound."""
-    emb = load_table(spark, "embeddings", sf_dir)
-    df = emb.withColumn(
-        "pu_label", F.when(F.col("label") == 9, F.lit(1.0)).otherwise(F.lit(0.0))
+    class _TraceGradual(_KnuthRounds, GradualReductionPULearner):
+        pass
+
+    learner = _TraceGradual(0.5, None)
+    learner.weight(_pu_input(spark, sf_dir), "pu_label", "embedding")
+    return spark.createDataFrame(
+        learner.trace_, _TRACE_SCHEMA + ", cur_gain bigint"
     )
-    cur_df = relabel_keep(df, "pu_label", "prevLabel", UNDEF_LABEL).withColumn(
-        "prevLabel", F.col("prevLabel").cast("int")
-    )
-    # first thresholding pass over unlabeled rows (:35-40)
-    cur_df = cur_df.withColumn(
-        "curLabel",
-        binarize_gradual(_trace_p_col(1), F.col("prevLabel"), 0.5, UNDEF_LABEL),
-    )
-    row = iteration_stats_df(cur_df).collect()[0]
-    new_rel_neg = int(row["new_rel_neg"] or 0)
-    total_pos = int(row["total_pos"])  # loop-invariant (:48)
-    total_rel_neg = int(row["total_rel_neg"])
-    prev_gain = float("inf")  # Long.MaxValue at :51
-    cur_gain = new_rel_neg
-    trace = [
-        (
-            1,
-            new_rel_neg,
-            total_pos,
-            total_rel_neg,
-            int(row["total_undef"]),
-            int(row["total_rows"]),
-            cur_gain,
-        )
-    ]
-    iteration = 1
-    while True:  # do-while (:54-84)
-        iteration += 1
-        cur_df = cur_df.drop("prevLabel").withColumnRenamed(
-            "curLabel", "prevLabel"
-        )
-        cur_df = cur_df.withColumn(
-            "curLabel",
-            binarize_gradual(
-                _trace_p_col(iteration), F.col("prevLabel"), 0.5, REL_NEG_LABEL
-            ),
-        )
-        prev_new_rel_neg = new_rel_neg  # :74
-        row = iteration_stats_df(cur_df).collect()[0]
-        new_rel_neg = int(row["total_rel_neg"])  # (cur==0), :75-78
-        total_rel_neg = int(row["total_rel_neg"])  # identical filter, :79
-        prev_gain, cur_gain = cur_gain, prev_new_rel_neg - total_rel_neg
-        trace.append(
-            (
-                iteration,
-                int(row["new_rel_neg"] or 0),
-                int(row["total_pos"]),
-                total_rel_neg,
-                int(row["total_undef"]),
-                int(row["total_rows"]),
-                cur_gain,
-            )
-        )
-        if not (
-            cur_gain > 0
-            and cur_gain < prev_gain
-            and total_pos < total_rel_neg
-        ):  # :84
-            break
-        if iteration >= _TRACE_MAX_ITERS:
-            break
-    return spark.createDataFrame(trace, _TRACE_SCHEMA + ", cur_gain bigint")
 
 
-def _sql_gradual_trace() -> str:
-    # iteration 1 = UNDEF-targeted thresholding; iterations 2+ =
-    # REL_NEG-targeted demote; the do-while is replayed by keeping
-    # iteration i (≥3) only while every prior body iteration j∈[2,i-1]
-    # satisfied the 3-clause condition (iterations 1-2 always run:
-    # pre-loop stats + the do-while's first body pass).
-    ctes = [
-        "s1 AS (SELECT vec_id, CASE WHEN label = 9 THEN 1 ELSE -1 END"
-        " AS prev FROM embeddings)",
-        f"g1 AS (SELECT vec_id, prev, CAST(CASE WHEN prev = -1 THEN"
-        f" CASE WHEN {_trace_p_sql(1)} < 0.5 THEN 0 ELSE -1 END"
-        f" ELSE prev END AS INTEGER) AS cur FROM s1)",
-    ]
-    for i in range(2, _TRACE_MAX_ITERS + 1):
-        ctes.append(f"s{i} AS (SELECT vec_id, cur AS prev FROM g{i - 1})")
-        ctes.append(
-            f"g{i} AS (SELECT vec_id, prev, CAST(CASE WHEN prev = 0 THEN"
-            f" CASE WHEN {_trace_p_sql(i)} < 0.5 THEN 0 ELSE -1 END"
-            f" ELSE prev END AS INTEGER) AS cur FROM s{i})"
-        )
-    stats = []
-    for i in range(1, _TRACE_MAX_ITERS + 1):
-        stats.append(
-            f"SELECT {i} AS iteration,"
-            " CAST(SUM(CASE WHEN prev = -1 AND cur = 0 THEN 1 ELSE 0 END)"
-            " AS BIGINT) AS new_rel_neg,"
-            " CAST(SUM(CASE WHEN cur = 1 THEN 1 ELSE 0 END) AS BIGINT)"
-            " AS total_pos,"
-            " CAST(SUM(CASE WHEN cur = 0 THEN 1 ELSE 0 END) AS BIGINT)"
-            " AS total_rel_neg,"
-            " CAST(SUM(CASE WHEN cur = -1 THEN 1 ELSE 0 END) AS BIGINT)"
-            " AS total_undef,"
-            f" COUNT(*) AS total_rows FROM g{i}"
-        )
-    union = " UNION ALL ".join(stats)
-    return f"""
-WITH {", ".join(ctes)},
-trace AS ({union}),
+# the do-while is replayed by keeping iteration i (≥3) only while every
+# prior body iteration j∈[2,i-1] satisfied the 3-clause condition
+# (iterations 1-2 always run: pre-loop stats + the do-while's first
+# body pass)
+SQL_PU_GRADUAL_TRACE = f"""
+WITH {_sql_trace_rows(gradual=True)},
 gained AS (
   SELECT *,
          CASE WHEN iteration = 1 THEN total_rel_neg
@@ -428,37 +331,16 @@ WHERE iteration <= 2 OR all_prior_ok = 1
 """
 
 
-SQL_PU_GRADUAL_TRACE = _sql_gradual_trace()
-
-
-#: bagging trace constants: per-round score offset (same step as the
-#: loop traces) and a coin stream decorrelated from the scores by a
-#: large odd offset plus a PER-ROUND MULTIPLIER (an additive stride
-#: alone makes each row's five coins an arithmetic progression mod
-#: 1000, which provably can never stay under 0.5 all five rounds — the
-#: all-rounds fallback branch would be unreachable).  Overflow-free:
-#: (PREMOD-1)*(KNUTH + 4*100003) + 500009 < 2^52.
+#: bagging trace constants: a coin stream decorrelated from the
+#: per-round scores by a large odd offset plus a PER-ROUND MULTIPLIER (an
+#: additive stride alone makes each row's five coins an arithmetic
+#: progression mod 1000, which provably can never stay under 0.5 all
+#: five rounds — the all-rounds fallback branch would be unreachable).
+#: Overflow-free: (PREMOD-1)*(KNUTH + 4*100003) + 500009 < 2^52.
 _BAG_T = 5
 _BAG_FRAC = 0.5
 _BAG_COIN_OFF = 500009
 _BAG_COIN_STEP = 100003
-
-
-def _bag_p_col(t: int) -> F.Column:
-    return (
-        (
-            (F.col("vec_id") % F.lit(_PREMOD)) * F.lit(_KNUTH)
-            + F.lit(t * _TRACE_STEP)
-        )
-        % F.lit(1000)
-    ) / F.lit(1000.0)
-
-
-def _bag_p_sql(t: int) -> str:
-    return (
-        f"((((vec_id % {_PREMOD}) * {_KNUTH} + {t * _TRACE_STEP}) % 1000)"
-        " / 1000.0)"
-    )
 
 
 def _bag_coin_sql(t: int) -> str:

@@ -631,23 +631,16 @@ FROM direct JOIN s2 USING (label)
 
 # -- ANN quality evaluation: recall@k of the LSH probe -------------------
 
-def q_ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@k of the sign-bucket LSH probe against the exact top-k —
-    the evaluation every ANN deployment runs before trusting the
-    approximate path.
-
-    Both sides are this engine's own registered operators composed into
-    one plan; matched counts are integers and k is a constant, so the
-    avg/min recalls are exact integer ratios (engine-portable doubles).
-    Scale shape: the per-(query, neighbor) probe join keys on the
-    query-set cross exact-k rows — query-set-sized, not corpus-sized.
-    """
-    exact = q_ann_cosine_topk(spark, sf_dir)
-    approx = q_ann_lsh_bucketed(spark, sf_dir).select(
-        "query_id", "neighbor_id", F.lit(1).alias("__m")
-    )
+def _recall_at_k(exact: DataFrame, approx: DataFrame) -> DataFrame:
+    """Recall@k of the ``approx`` neighbor lists against the ``exact``
+    top-k, both keyed by ``(query_id, neighbor_id)``: one row of query
+    count, average recall and the fewest neighbors any query matched.
+    Matched counts are integers and k is a constant, so the recalls are
+    exact integer ratios (engine-portable doubles).  The probe join is
+    query-set-sized, not corpus-sized."""
+    hits = approx.select("query_id", "neighbor_id", F.lit(1).alias("__m"))
     qm = (
-        exact.join(approx, ["query_id", "neighbor_id"], "left")
+        exact.join(hits, ["query_id", "neighbor_id"], "left")
         .groupBy("query_id")
         .agg(F.count("__m").alias("matched"))
     )
@@ -658,6 +651,16 @@ def q_ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             / (F.count(F.lit(1)) * F.lit(TOP_K))
         ).alias("avg_recall"),
         F.min("matched").cast("bigint").alias("min_matched"),
+    )
+
+
+def q_ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recall@k of the sign-bucket LSH probe against the exact top-k —
+    the evaluation every ANN deployment runs before trusting the
+    approximate path.  Both sides are this engine's own registered
+    operators composed into one plan."""
+    return _recall_at_k(
+        q_ann_cosine_topk(spark, sf_dir), q_ann_lsh_bucketed(spark, sf_dir)
     )
 
 
@@ -669,22 +672,8 @@ def q_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     default on this fixture; see ``ann_ivf_tuning``).  Same query-set-sized probe join and exact
     integer ratios; rows-only (the IVF side embeds the seeded KMeans
     fit), with the recall floor pinned by a pytest property."""
-    exact = q_ann_cosine_topk(spark, sf_dir)
-    approx = q_ann_ivf(spark, sf_dir).select(
-        "query_id", "neighbor_id", F.lit(1).alias("__m")
-    )
-    qm = (
-        exact.join(approx, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(F.count("__m").alias("matched"))
-    )
-    return qm.agg(
-        F.count(F.lit(1)).alias("n_queries"),
-        (
-            F.sum("matched").cast("double")
-            / (F.count(F.lit(1)) * F.lit(TOP_K))
-        ).alias("avg_recall"),
-        F.min("matched").cast("bigint").alias("min_matched"),
+    return _recall_at_k(
+        q_ann_cosine_topk(spark, sf_dir), q_ann_ivf(spark, sf_dir)
     )
 
 
@@ -953,22 +942,8 @@ def q_ann_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = cosine_topk(
         base_full, base_full.filter(F.col("vec_id") < N_QUERIES)
     )
-    trunc = cosine_topk(
-        base_t, base_t.filter(F.col("vec_id") < N_QUERIES)
-    ).select("query_id", "neighbor_id", F.lit(1).alias("__m"))
-    qm = (
-        exact.join(trunc, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(F.count("__m").alias("matched"))
-    )
-    return qm.agg(
-        F.count(F.lit(1)).alias("n_queries"),
-        (
-            F.sum("matched").cast("double")
-            / (F.count(F.lit(1)) * F.lit(TOP_K))
-        ).alias("avg_recall"),
-        F.min("matched").cast("bigint").alias("min_matched"),
-    )
+    trunc = cosine_topk(base_t, base_t.filter(F.col("vec_id") < N_QUERIES))
+    return _recall_at_k(exact, trunc)
 
 
 _Q16_SQL = (
@@ -1089,26 +1064,10 @@ def q_ann_binary_hamming_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pu4spark_spark.plans import two_phase_rank
 
     hs = scored.withColumn("hamming", ham)
-    approx = (
-        two_phase_rank(
-            hs, ["query_id"], [F.asc("hamming"), F.asc("vec_id")], TOP_K
-        )
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-        .withColumn("__m", F.lit(1))
-    )
-    qm = (
-        exact.join(approx, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(F.count("__m").alias("matched"))
-    )
-    return qm.agg(
-        F.count(F.lit(1)).alias("n_queries"),
-        (
-            F.sum("matched").cast("double")
-            / (F.count(F.lit(1)) * F.lit(TOP_K))
-        ).alias("avg_recall"),
-        F.min("matched").cast("bigint").alias("min_matched"),
-    )
+    approx = two_phase_rank(
+        hs, ["query_id"], [F.asc("hamming"), F.asc("vec_id")], TOP_K
+    ).select("query_id", F.col("vec_id").alias("neighbor_id"))
+    return _recall_at_k(exact, approx)
 
 
 _LO_SQL = _sql_sign_code("embedding", 0, 32)

@@ -28,21 +28,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pu4spark_spark.config import INDEXED_FEATURES_NAME, LABEL_NAME
-from pu4spark_spark.labels import (
-    UNDEF_LABEL,
-    binarize_traditional,
-    iteration_stats,
-    relabel_keep,
-)
-from pu4spark_spark.two_step import VEC_FEATURES_NAME, TwoStepPULearner
+from pu4spark_spark.labels import binarize_traditional, iteration_stats
+from pu4spark_spark.two_step import TwoStepPULearner
 
 
 class TraditionalPULearner(TwoStepPULearner):
     """Fixed-iteration reliable-negative mining.
 
     ``weight`` appends ``final_label`` = P(positive) as a double
-    (reference API contract: PositiveUnlabeledLearner.scala:16-25).
+    (reference API contract: PositiveUnlabeledLearner.scala:16-25) and
+    leaves ``trace_``: one dict per executed iteration holding
+    ``iteration`` and the five :func:`~pu4spark_spark.labels.iteration_stats`
+    counts.
     """
 
     def __init__(self, rel_neg_threshold: float, max_iters: int, classifier):
@@ -57,14 +54,10 @@ class TraditionalPULearner(TwoStepPULearner):
         final_label: str = "finalLabel",
         keep_internal: bool = False,
     ) -> DataFrame:
-        # step 0: train on all rows, score all rows (zeroStep, :30-32)
-        cur_df = self.zero_step(df, label_col, features_col, final_label)
-        cur_df = cur_df.drop(LABEL_NAME)
-        # original label → prevLabel ∈ {1, -1}, original column dropped (:40)
-        cur_df = relabel_keep(cur_df, label_col, "prevLabel", UNDEF_LABEL).withColumn(
-            "prevLabel", F.col("prevLabel").cast("int")
-        )
+        # step 0, original label → prevLabel ∈ {1, -1} (:30-40)
+        cur_df = self.seed_labels(df, label_col, features_col, final_label)
 
+        self.trace_ = []
         prev_persisted: DataFrame | None = None
         for i in range(1, self.max_iters + 1):
             # mine reliable negatives among still-unlabeled rows (:44-46)
@@ -78,6 +71,7 @@ class TraditionalPULearner(TwoStepPULearner):
             prev_persisted = cur_df
             # ONE agg job for all convergence scalars (ref: count at :47-50)
             stats = iteration_stats(cur_df)
+            self.trace_.append({"iteration": i, **stats})
             if stats["new_rel_neg"] == 0:  # early exit (:53-55)
                 break
             # retrain on decided labels, rescore every row (:58-71)
@@ -88,13 +82,4 @@ class TraditionalPULearner(TwoStepPULearner):
                 "curLabel", "prevLabel"
             )
 
-        if keep_internal:
-            return cur_df
-        return self.cleanup(
-            cur_df,
-            "prevLabel",
-            "curLabel",
-            INDEXED_FEATURES_NAME,
-            VEC_FEATURES_NAME,
-            LABEL_NAME,
-        )
+        return self.finish(cur_df, keep_internal)

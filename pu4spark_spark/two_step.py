@@ -37,7 +37,7 @@ from pyspark.sql.types import ArrayType
 
 from pu4spark_spark.api import PositiveUnlabeledLearner
 from pu4spark_spark.config import INDEXED_FEATURES_NAME, LABEL_NAME
-from pu4spark_spark.labels import index_label
+from pu4spark_spark.labels import UNDEF_LABEL, index_label, relabel_keep
 
 #: classifier temp columns dropped after each scoring pass
 #: (reference: TraditionalPULearner.scala:32,71-72)
@@ -110,6 +110,18 @@ class TwoStepPULearner(PositiveUnlabeledLearner):
         scored = model.transform(prepared)
         return scored.withColumn(final_label, p_positive()).drop(*_SCORE_TEMPS)
 
+    def seed_labels(
+        self, df: DataFrame, label_col: str, features_col: str, final_label: str
+    ) -> DataFrame:
+        """Step 0, then the original label → ``prevLabel`` ∈ {1, -1} with
+        the original column dropped (≡ TraditionalPULearner.scala:30-40,
+        GradualReductionPULearner.scala:28-33)."""
+        cur_df = self.zero_step(df, label_col, features_col, final_label)
+        cur_df = relabel_keep(
+            cur_df.drop(LABEL_NAME), label_col, "prevLabel", UNDEF_LABEL
+        )
+        return cur_df.withColumn("prevLabel", F.col("prevLabel").cast("int"))
+
     # -- iteration helpers ----------------------------------------------
     def fit_on_current(self, df: DataFrame, cur_col: str):
         """Train the classifier on rows with a decided label
@@ -153,3 +165,18 @@ class TwoStepPULearner(PositiveUnlabeledLearner):
     def cleanup(df: DataFrame, *cols: str) -> DataFrame:
         """Drop internal columns from the user-facing result."""
         return df.drop(*cols)
+
+    def finish(self, df: DataFrame, keep_internal: bool) -> DataFrame:
+        """The loop learners' result: the clean user schema (input
+        columns + ``final_label``), or the sentinel columns too when
+        ``keep_internal``."""
+        if keep_internal:
+            return df
+        return self.cleanup(
+            df,
+            "prevLabel",
+            "curLabel",
+            INDEXED_FEATURES_NAME,
+            VEC_FEATURES_NAME,
+            LABEL_NAME,
+        )

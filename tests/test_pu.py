@@ -5,6 +5,7 @@ from __future__ import annotations
 import random
 
 import pytest
+from conftest import SF_DIR
 from pyspark.sql import functions as F
 
 from pu4spark_spark.config import (
@@ -564,28 +565,45 @@ def test_elkan_c_matches_class_prior_c_hat(spark):
         assert abs(got[k] - expected[k]) < 1e-9, k
 
 
-def test_traditional_trace_protocol(spark):
-    """The driver-witnessed convergence trace replays the exact loop
-    protocol: monotone non-increasing mining, invariant totals, and
-    the new_rel_neg==0 early exit strictly inside the bound."""
-    from pu4spark_spark.operators.pu_queries import (
-        _TRACE_MAX_ITERS,
-        q_pu_traditional_trace,
-    )
+def _loop_trace(spark, learner: str, source: str):
+    """One loop learner's convergence trace at sf0.001: the Knuth-scored
+    trace query's rows, or ``trace_`` of a real LR ``weight()`` run."""
+    from pu4spark_spark.operators import pu_queries as pq
 
-    rows = q_pu_traditional_trace(spark, "/root/testdata/sf0.001").collect()
+    if source == "knuth":
+        return getattr(pq, f"q_pu_{learner}_trace")(spark, SF_DIR).collect()
+    if learner == "traditional":
+        cfg = TraditionalPULearnerConfig(maxIters=pq._TRACE_MAX_ITERS)
+    else:
+        cfg = GradualReductionPULearnerConfig()
+    model = cfg.build()
+    model.weight(pq._pu_input(spark, SF_DIR), "pu_label", "embedding")
+    return model.trace_
+
+
+@pytest.mark.parametrize("source", ["knuth", "lr"])
+def test_traditional_trace_protocol(spark, source):
+    """The convergence trace of the shipped loop, under the hash scorer
+    and under a real LR fit: monotone non-increasing mining, invariant
+    totals, and (hash scorer) the new_rel_neg==0 early exit strictly
+    inside the bound."""
+    from pu4spark_spark.operators.pu_queries import _TRACE_MAX_ITERS
+
+    rows = _loop_trace(spark, "traditional", source)
     assert 2 <= len(rows) <= _TRACE_MAX_ITERS
     assert [r["iteration"] for r in rows] == list(range(1, len(rows) + 1))
     # positives never change; total_rows constant
     assert len({r["total_pos"] for r in rows}) == 1
     assert len({r["total_rows"] for r in rows}) == 1
     # rel-neg mass only grows; undef only shrinks (Traditional never
-    # demotes), and the trace ends exactly at the first dry iteration
+    # demotes), and only the last row may have mined nothing
     for a, b in zip(rows, rows[1:]):
         assert b["total_rel_neg"] >= a["total_rel_neg"]
         assert b["total_undef"] <= a["total_undef"]
-        assert a["new_rel_neg"] > 0  # only the LAST row may be 0
-    assert rows[-1]["new_rel_neg"] == 0  # scorer freezes at iter 3
+        assert a["new_rel_neg"] > 0
+    if source == "knuth":
+        assert rows[-1]["new_rel_neg"] == 0  # scorer freezes at iter 3
+        assert len(rows) < _TRACE_MAX_ITERS
     # conservation each iteration
     for r in rows:
         assert (
@@ -594,19 +612,25 @@ def test_traditional_trace_protocol(spark):
         )
 
 
-def test_gradual_trace_protocol(spark):
+@pytest.mark.parametrize("source", ["knuth", "lr"])
+def test_gradual_trace_protocol(spark, source):
     """The GradRed trace honors the verbatim 3-clause do-while: every
     non-terminal body iteration satisfied it, the terminal one broke
     it; positives invariant; iterations 2+ only demote."""
-    from pu4spark_spark.operators.pu_queries import (
-        _TRACE_MAX_ITERS,
-        q_pu_gradual_trace,
-    )
+    from pu4spark_spark.gradual import MAX_SAFE_ITERS
+    from pu4spark_spark.operators.pu_queries import _TRACE_MAX_ITERS
 
-    rows = q_pu_gradual_trace(spark, "/root/testdata/sf0.001").collect()
-    assert 2 <= len(rows) <= _TRACE_MAX_ITERS
+    rows = _loop_trace(spark, "gradual", source)
+    bound = _TRACE_MAX_ITERS if source == "knuth" else MAX_SAFE_ITERS
+    assert 2 <= len(rows) <= bound
+    assert [r["iteration"] for r in rows] == list(range(1, len(rows) + 1))
     assert len({r["total_pos"] for r in rows}) == 1
     total_pos = rows[0]["total_pos"]
+    for r in rows:
+        assert (
+            r["total_pos"] + r["total_rel_neg"] + r["total_undef"]
+            == r["total_rows"]
+        )
     # iteration 1 mines from UNDEF: gain = mined count
     assert rows[0]["cur_gain"] == rows[0]["new_rel_neg"] > 0
     # iterations 2+ re-threshold REL_NEG only: nothing newly mined,
@@ -614,6 +638,7 @@ def test_gradual_trace_protocol(spark):
     for a, b in zip(rows, rows[1:]):
         assert b["new_rel_neg"] == 0
         assert b["cur_gain"] == a["total_rel_neg"] - b["total_rel_neg"]
+
     # the do-while held for every non-terminal body row, broke at the end
     def cond(prev_gain, r):
         return (
@@ -622,11 +647,45 @@ def test_gradual_trace_protocol(spark):
             and total_pos < r["total_rel_neg"]
         )
 
-    prev_gain = float("inf")
-    for r in rows[1:-1]:
-        assert cond(rows[rows.index(r) - 1]["cur_gain"], r)
-    if len(rows) < _TRACE_MAX_ITERS:
+    for a, b in zip(rows[:-2], rows[1:-1]):
+        assert cond(a["cur_gain"], b)
+    if len(rows) < bound:
         assert not cond(rows[-2]["cur_gain"], rows[-1])
+
+
+def test_loop_traces_match_duckdb_oracle(spark):
+    """The Traditional and Gradual traces (the shipped ``weight()`` under
+    the hash scorer) equal their SQL replays on DuckDB, compared as
+    ``tools/check_oracle.py`` compares them: columns by name, rows as
+    an order-insensitive set."""
+    import sys
+    from pathlib import Path
+
+    import duckdb
+
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
+    from check_oracle import rowset
+
+    from pu4spark_spark.operators import pu_queries as pq
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW embeddings AS SELECT * FROM "
+        f"read_parquet('{SF_DIR}/embeddings.parquet')"
+    )
+    for query, sql in (
+        (pq.q_pu_traditional_trace, pq.SQL_PU_TRADITIONAL_TRACE),
+        (pq.q_pu_gradual_trace, pq.SQL_PU_GRADUAL_TRACE),
+    ):
+        got = query(spark, SF_DIR)
+        cols = sorted(got.columns)
+        rel = con.sql(sql)
+        assert sorted(rel.columns) == cols, query.__name__
+        idx = [rel.columns.index(c) for c in cols]
+        want = rowset([[r[i] for i in idx] for r in rel.fetchall()])
+        assert rowset([[r[c] for c in cols] for r in got.collect()]) == want, (
+            query.__name__
+        )
 
 
 def test_bagging_explicit_id_col(spark):
