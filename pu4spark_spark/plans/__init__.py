@@ -11,8 +11,12 @@ no-op; on a single small file it fans out to every core.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+logger = logging.getLogger(__name__)
 
 
 def spread(df: DataFrame, factor: int = 2) -> DataFrame:
@@ -103,12 +107,16 @@ def release_cached() -> None:
     localCheckpoint frame to a later query — every such frame must be
     fully consumed before the query returns (true today: checkpointed
     loop state in dedup/similarity is drained into the query's own
-    result)."""
+    result).  Non-fatal: a frame that fails to unpersist is logged and
+    skipped, so the next query still runs."""
     while _RELEASABLE:
         try:
             _RELEASABLE.pop().unpersist()
-        except Exception:
-            pass
+        except Exception as exc:
+            logger.warning(
+                "release_cached: unpersist failed with %s: %s",
+                type(exc).__name__, exc, exc_info=True,
+            )
 
 
 def explain_str(df: DataFrame, mode: str = "formatted") -> str:

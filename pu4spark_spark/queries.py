@@ -24,7 +24,7 @@ from pu4spark_spark.operators import (  # noqa: E402
     tpch_extra,
 )
 from pu4spark_spark.sources import formats as fmt_sources  # noqa: E402
-from pu4spark_spark.sources import pydatasource as pyds_sources  # noqa: E402
+from pu4spark_spark.sources.lake import queries as pyds_sources  # noqa: E402
 from pu4spark_spark.streaming import events as streaming_events  # noqa: E402
 from pu4spark_spark.streaming import ingest as streaming_ingest  # noqa: E402
 from pu4spark_spark.streaming import sketch as streaming_sketch  # noqa: E402

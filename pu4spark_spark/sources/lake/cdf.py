@@ -1,7 +1,6 @@
 """Batch CHANGE DATA FEED (Delta's ``table_changes``): exact
 serve from commit-time CDC files, else derivation from per-commit
-file diffs with size-gated broadcast joins.  Split from
-sources/pydatasource.py (r12)."""
+file diffs with size-gated broadcast joins."""
 
 from __future__ import annotations
 

@@ -1,7 +1,7 @@
 """Row-level DML on the mini-lake: DELETE (delete-file
 tombstones), MERGE (fast upsert + conditional clause form), the
 distributed sidecar/data-shard staging they share, and commit-time
-CDC file recording.  Split from sources/pydatasource.py (r12)."""
+CDC file recording."""
 
 from __future__ import annotations
 
@@ -39,9 +39,10 @@ from pu4spark_spark.sources.lake.protocol import (
     _mapping_of,
     _manifest_at,
     _manifest_files,
+    _remove_files,
     _tombstones_of,
     _write_atomic,
-    _write_atomic_excl,
+    commit_manifest,
 )
 from pu4spark_spark.sources.lake.source import (
     register_pyds,
@@ -425,11 +426,7 @@ def delete_from_jsonl_dir(
             # Drop the staged key files and commit a pure-metadata
             # delete: CDF readers classify it metadata-only, exactly
             # right for zero changed rows.
-            for kf in key_files:
-                try:
-                    os.remove(os.path.join(path, kf))
-                except OSError:
-                    pass
+            _remove_files(path, key_files)
             key_files = []
 
     # DELETION VECTORS (Delta's DVs): instead of a ledger entry whose
@@ -454,8 +451,6 @@ def delete_from_jsonl_dir(
             # reader prunes with (advisory: no entry → scan it).  The
             # key hull is one bounded job for DataFrame keys (1-row
             # scalar) and free for iterables.
-            import json as _json
-
             if isinstance(doc_ids, DataFrame):
                 hull = doc_ids.agg(
                     F.min("doc_id"), F.max("doc_id")
@@ -491,13 +486,6 @@ def delete_from_jsonl_dir(
                     (),
                 )
 
-    def _drop_key_files() -> None:
-        for kf in key_files + cdc_files:
-            try:
-                os.remove(os.path.join(path, kf))
-            except OSError:
-                pass
-
     new_manifest = {f: manifest[f] for f in files}
     # carry reserved keys other than the ledger (e.g. the streaming
     # sink's _txn idempotence marker) through the metadata commit
@@ -528,37 +516,21 @@ def delete_from_jsonl_dir(
         }
     elif key_files:
         # empty table: the keys can tombstone nothing — reclaim now
-        _drop_key_files()
+        _remove_files(path, key_files + cdc_files)
         key_files = []
     if tombs["entries"]:
         new_manifest[TOMBSTONE_KEY] = tombs
-    import time as _time
-
-    new_manifest["_ts"] = _time.time_ns()
-    body = _json.dumps(new_manifest)
     try:
-        _write_atomic_excl(
-            os.path.join(path, f"_MANIFEST.v{version}"), body
-        )
-    except FileExistsError:
+        commit_manifest(path, base, new_manifest, "delete")
+    except ManifestCommitConflict:
         # rolled back: the key files are in no committed manifest
-        _drop_key_files()
-        raise ManifestCommitConflict(
-            f"concurrent commit: _MANIFEST.v{version} was claimed by "
-            f"another writer after this delete read version {base}; "
-            "re-plan the delete against the new table state"
-        ) from None
-    if _latest_manifest_version(path) == version:
-        _write_atomic(os.path.join(path, "_MANIFEST"), body)
-    if deletion_vectors and key_files:
+        _remove_files(path, key_files + cdc_files)
+        raise
+    if deletion_vectors:
         # DV mode: the key files were position-scan INPUTS only — no
         # manifest references them, reclaim immediately (cdc files,
         # when staged, ARE referenced and stay)
-        for kf in key_files:
-            try:
-                os.remove(os.path.join(path, kf))
-            except OSError:
-                pass
+        _remove_files(path, key_files)
     return version
 
 
@@ -669,8 +641,6 @@ def merge_into_jsonl_dir(
     re-runs the merge — a silent metadata retry could classify a
     concurrently-inserted key as not-matched and land it twice.
     Returns the committed version."""
-    import json as _json
-
     register_pyds(spark)  # also pins the active session for this thread
     clause_path = not (
         when_matched_update is True
@@ -728,36 +698,15 @@ def merge_into_jsonl_dir(
                 "entries": entries,
                 "added": added,
             }
-        import time as _time
-
-        new_manifest["_ts"] = _time.time_ns()
-        body = _json.dumps(new_manifest)
         try:
-            _write_atomic_excl(
-                os.path.join(path, f"_MANIFEST.v{version}"), body
+            return commit_manifest(
+                path, base, new_manifest, "merge", stage_stats
             )
-        except FileExistsError:
-            last = ManifestCommitConflict(
-                f"concurrent commit: _MANIFEST.v{version} was claimed "
-                "by another writer during merge; re-claiming against "
-                "the new base"
-            )
-            continue
-        from pu4spark_spark.sources.lake.checkpoint import (
-            write_stats_delta,
-        )
-
-        write_stats_delta(path, version, stage_stats)
-        if _latest_manifest_version(path) == version:
-            _write_atomic(os.path.join(path, "_MANIFEST"), body)
-        return version
+        except ManifestCommitConflict as exc:
+            last = exc  # lost the claim: re-claim against the new base
     # every claim lost: roll back the staged shards (in no committed
     # manifest — invisible all along) and surface the conflict
-    for f in staged:
-        try:
-            os.remove(os.path.join(path, f))
-        except OSError:
-            pass
+    _remove_files(path, staged)
     assert last is not None
     raise last
 
@@ -781,7 +730,6 @@ def _merge_clauses(
     ``cdf=True`` also stages the commit's typed change rows
     (update_preimage/update_postimage/delete/insert) as ``_cdc-*``
     files from the SAME classification join — no extra scan."""
-    import json as _json
     import uuid as _uuid
 
     from pyspark.storagelevel import StorageLevel
@@ -885,14 +833,6 @@ def _merge_clauses(
             )
     finally:
         joined.unpersist()
-
-    def _rollback() -> None:
-        for f in list(staged) + key_files + cdc_files:
-            try:
-                os.remove(os.path.join(path, f))
-            except OSError:
-                pass
-
     manifest = _manifest_at(path, base)
     _check_features(manifest)  # refuse unknown table features
     files = sorted(_manifest_files(manifest))
@@ -909,41 +849,19 @@ def _merge_clauses(
     if key_files and files:
         entries.append({"v": version, "files": key_files, "n": n_keys})
     elif key_files:
-        for kf in key_files:
-            try:
-                os.remove(os.path.join(path, kf))
-            except OSError:
-                pass
+        _remove_files(path, key_files)
         key_files = []
     new_manifest.update(staged)
     if entries:
         added = dict(tombs.get("added", {}))
         added.update({f: version for f in staged})
         new_manifest[TOMBSTONE_KEY] = {"entries": entries, "added": added}
-    import time as _time
-
-    new_manifest["_ts"] = _time.time_ns()
-    body = _json.dumps(new_manifest)
     try:
-        _write_atomic_excl(
-            os.path.join(path, f"_MANIFEST.v{version}"), body
-        )
-    except FileExistsError:
-        _rollback()
-        raise ManifestCommitConflict(
-            f"concurrent commit: _MANIFEST.v{version} was claimed by "
-            f"another writer after this clause merge planned against "
-            f"version {base}; the matched/not-matched split is stale — "
-            "staged shards were rolled back, re-run the merge"
-        ) from None
-    from pu4spark_spark.sources.lake.checkpoint import (
-        write_stats_delta,
-    )
-
-    write_stats_delta(path, version, stage_stats)
-    if _latest_manifest_version(path) == version:
-        _write_atomic(os.path.join(path, "_MANIFEST"), body)
-    return version
+        return commit_manifest(path, base, new_manifest, "merge", stage_stats)
+    except ManifestCommitConflict:
+        # the matched/not-matched split is stale: roll everything back
+        _remove_files(path, [*staged, *key_files, *cdc_files])
+        raise
 
 
 def update_jsonl_dir(

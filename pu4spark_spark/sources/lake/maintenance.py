@@ -1,8 +1,7 @@
 """Table MAINTENANCE + metadata commits: schema evolution,
 CHECK constraints add/drop, compaction (OPTIMIZE, with optional
 clustering), vacuum with retention grace, shallow CLONE, RESTORE,
-DESCRIBE HISTORY, and the commit-retry helper.  Split from
-sources/pydatasource.py (r12)."""
+DESCRIBE HISTORY, and the commit-retry helper."""
 
 from __future__ import annotations
 
@@ -55,9 +54,9 @@ from pu4spark_spark.sources.lake.protocol import (
     _retired_physicals,
     _shard_path,
     _tombstones_of,
+    _remove_unclaimed,
     _typed_fields_of_ddl,
-    _write_atomic,
-    _write_atomic_excl,
+    commit_manifest,
 )
 from pu4spark_spark.sources.lake.source import (
     register_pyds,
@@ -77,9 +76,6 @@ def evolve_jsonl_schema(
     every engine can serve without rewriting data — old shards
     null-extend; renames/drops/retypes would silently corrupt old
     rows and are rejected loudly).  Returns the new version."""
-    import json as _json
-    import time as _time
-
     base = (
         base_version
         if base_version is not None
@@ -127,48 +123,7 @@ def evolve_jsonl_schema(
         _stamp_features(new_manifest, "column-mapping")
     new_manifest[SCHEMA_KEY] = new_ddl
     new_manifest[OP_KEY] = "evolve-schema"
-    new_manifest["_ts"] = _time.time_ns()
-    body = _json.dumps(new_manifest)
-    try:
-        _write_atomic_excl(
-            os.path.join(path, f"_MANIFEST.v{version}"), body
-        )
-    except FileExistsError:
-        raise ManifestCommitConflict(
-            f"concurrent commit: _MANIFEST.v{version} was claimed by "
-            f"another writer after this evolve read version {base}; "
-            "re-plan the schema change against the new table state"
-        ) from None
-    if _latest_manifest_version(path) == version:
-        _write_atomic(os.path.join(path, "_MANIFEST"), body)
-    return version
-
-
-def _claim_metadata_commit(
-    path: str, base: int, new_manifest: dict, what: str
-) -> int:
-    """Claim ``base + 1`` for a pure-metadata commit (create-if-absent
-    OCC, live pointer flipped only if still latest) — the shared tail
-    of evolve/rename/drop/constraint commits."""
-    import json as _json
-    import time as _time
-
-    version = base + 1
-    new_manifest["_ts"] = _time.time_ns()
-    body = _json.dumps(new_manifest)
-    try:
-        _write_atomic_excl(
-            os.path.join(path, f"_MANIFEST.v{version}"), body
-        )
-    except FileExistsError:
-        raise ManifestCommitConflict(
-            f"concurrent commit: _MANIFEST.v{version} was claimed by "
-            f"another writer after this {what} read version {base}; "
-            "re-plan against the new table state"
-        ) from None
-    if _latest_manifest_version(path) == version:
-        _write_atomic(os.path.join(path, "_MANIFEST"), body)
-    return version
+    return commit_manifest(path, base, new_manifest, "evolve")
 
 
 def rename_jsonl_column(
@@ -244,7 +199,7 @@ def rename_jsonl_column(
     }
     _stamp_features(new_manifest, "column-mapping")
     new_manifest[OP_KEY] = "rename-column"
-    return _claim_metadata_commit(path, base, new_manifest, "rename")
+    return commit_manifest(path, base, new_manifest, "rename")
 
 
 def drop_jsonl_column(
@@ -303,7 +258,7 @@ def drop_jsonl_column(
     }
     _stamp_features(new_manifest, "column-mapping")
     new_manifest[OP_KEY] = "drop-column"
-    return _claim_metadata_commit(path, base, new_manifest, "drop")
+    return commit_manifest(path, base, new_manifest, "drop")
 
 
 def add_constraint_jsonl_dir(
@@ -319,9 +274,6 @@ def add_constraint_jsonl_dir(
     fails the whole job before any manifest claim — nothing partial
     ever commits.  The expression must compile under the restricted
     grammar (:func:`_compile_constraint`) or the ADD itself fails."""
-    import json as _json
-    import time as _time
-
     _compile_constraint(expr)  # fail at ADD time, not at write time
     base = (
         base_version
@@ -340,26 +292,11 @@ def add_constraint_jsonl_dir(
             f"constraint {name!r} already exists: {cons[name]!r}"
         )
     cons[name] = expr
-    version = base + 1
     new_manifest = dict(manifest)
     new_manifest[CONSTRAINT_KEY] = cons
     _stamp_features(new_manifest, "check-constraints")
     new_manifest[OP_KEY] = "add-constraint"
-    new_manifest["_ts"] = _time.time_ns()
-    body = _json.dumps(new_manifest)
-    try:
-        _write_atomic_excl(
-            os.path.join(path, f"_MANIFEST.v{version}"), body
-        )
-    except FileExistsError:
-        raise ManifestCommitConflict(
-            f"concurrent commit: _MANIFEST.v{version} was claimed by "
-            f"another writer after this constraint read version {base}; "
-            "re-plan the ADD CONSTRAINT against the new table state"
-        ) from None
-    if _latest_manifest_version(path) == version:
-        _write_atomic(os.path.join(path, "_MANIFEST"), body)
-    return version
+    return commit_manifest(path, base, new_manifest, "ADD CONSTRAINT")
 
 
 def drop_constraint_jsonl_dir(
@@ -367,9 +304,6 @@ def drop_constraint_jsonl_dir(
 ) -> int:
     """DROP a named constraint — the metadata-commit twin of
     :func:`add_constraint_jsonl_dir` (unknown names fail loudly)."""
-    import json as _json
-    import time as _time
-
     base = (
         base_version
         if base_version is not None
@@ -381,28 +315,13 @@ def drop_constraint_jsonl_dir(
     if name not in cons:
         raise ValueError(f"constraint {name!r} does not exist")
     del cons[name]
-    version = base + 1
     new_manifest = dict(manifest)
     if cons:
         new_manifest[CONSTRAINT_KEY] = cons
     else:
         new_manifest.pop(CONSTRAINT_KEY, None)
     new_manifest[OP_KEY] = "drop-constraint"
-    new_manifest["_ts"] = _time.time_ns()
-    body = _json.dumps(new_manifest)
-    try:
-        _write_atomic_excl(
-            os.path.join(path, f"_MANIFEST.v{version}"), body
-        )
-    except FileExistsError:
-        raise ManifestCommitConflict(
-            f"concurrent commit: _MANIFEST.v{version} was claimed by "
-            f"another writer after this constraint read version {base}; "
-            "re-plan the DROP CONSTRAINT against the new table state"
-        ) from None
-    if _latest_manifest_version(path) == version:
-        _write_atomic(os.path.join(path, "_MANIFEST"), body)
-    return version
+    return commit_manifest(path, base, new_manifest, "DROP CONSTRAINT")
 
 
 #: interleave width for OPTIMIZE ZORDER — 8 bits/column = 256
@@ -619,10 +538,7 @@ def compact_jsonl_dir(
     # LOGICAL, so translate back through the mapping (a retired
     # physical — dropped column — has no logical name and is skipped:
     # its data is gone from the rewrite anyway).
-    from pu4spark_spark.sources.lake.checkpoint import (
-        assemble_stats,
-        write_stats_delta,
-    )
+    from pu4spark_spark.sources.lake.checkpoint import assemble_stats
 
     pre_bloom_phys: set[str] = set()
     _pre_bloom = assemble_stats(path, families={"_bloom"}).get(
@@ -677,21 +593,6 @@ def compact_jsonl_dir(
     import shutil
 
     shutil.rmtree(stage, ignore_errors=True)
-    version = base + 1
-    # metadata last, each an atomic rename-commit, live pointer very
-    # last: rewrite marker → snapshot → stats → _MANIFEST.  The marker
-    # (``.rewrite`` sidecar) declares this commit dataChange=false so
-    # the version stream reader SKIPS it — compaction rewrites rows,
-    # it never adds any.  The marker body is the md5 of the snapshot
-    # it marks: written first so a reader can never observe the
-    # snapshot without the marker, and TETHERED so a crash between the
-    # two leaves a marker that matches nothing — the next data commit
-    # claiming the same version number streams as data instead of
-    # being silently reclassified as a rewrite
-    # (``_rewrite_marker_valid``).
-    import hashlib as _hashlib
-    import time as _time
-
     # a rewrite is content-neutral INCLUDING the table's metadata
     # contract: carry the pre-compaction commit's _schema (the
     # rewritten shards hold every evolved column — the read above
@@ -707,7 +608,6 @@ def compact_jsonl_dir(
     # column-mapping invariant; collapsing here would fork the
     # table's physical identity mid-history and break every reader
     # that resolves columns by it).
-    pre_m = _manifest_at(path, version - 1)
     for carry in (
         SCHEMA_KEY, CONSTRAINT_KEY, TXN_KEY, MAPPING_KEY, FEATURES_KEY,
         CKPT_INTERVAL_KEY,
@@ -717,66 +617,18 @@ def compact_jsonl_dir(
     if payload_format == "parquet":
         _stamp_features(new_manifest, "payload-parquet")
     new_manifest[OP_KEY] = "compact"
-    new_manifest["_ts"] = _time.time_ns()
-    body = _json.dumps(new_manifest)
-
-    def _rollback_shards() -> None:
-        winner_files: set[str] = set()
-        try:
-            with open(os.path.join(path, f"_MANIFEST.v{version}")) as fh:
-                winner_files = set(_json.load(fh))
-        except (OSError, ValueError):
-            pass
-        for f in new_manifest:
-            if f not in winner_files:
-                try:
-                    os.remove(os.path.join(path, f))
-                except OSError:
-                    pass
-
-    # the marker is claimed CREATE-IF-ABSENT too: with plain overwrite,
-    # two compactions racing the same version clobber each other's
-    # marker md5, and the loser's sweep below would delete the WINNER's
-    # valid marker — either way the winner's rewrite commit gets
-    # misclassified as a data commit and the version stream re-delivers
-    # every compacted row.  An existing marker means another compactor
-    # is mid-claim for this version: conflict out now.
+    # the ``.rewrite`` marker declares this commit dataChange=false so
+    # the version stream reader SKIPS it — compaction rewrites rows, it
+    # never adds any.  On a lost claim the compacted files are rolled
+    # back (they are in no committed manifest) minus anything the
+    # winner references.
     try:
-        _write_atomic_excl(
-            os.path.join(path, f"_MANIFEST.v{version}.rewrite"),
-            _hashlib.md5(body.encode()).hexdigest(),
+        return commit_manifest(
+            path, base, new_manifest, "compaction", ck_delta, rewrite=True
         )
-    except FileExistsError:
-        _rollback_shards()
-        raise ManifestCommitConflict(
-            f"concurrent commit: _MANIFEST.v{version}.rewrite is already "
-            "claimed by another compaction; the rewrite was rolled back"
-        ) from None
-    # the snapshot itself is claimed CREATE-IF-ABSENT like every data
-    # commit — _write_atomic here would silently overwrite a concurrent
-    # writer's committed snapshot, breaking manifest immutability (and
-    # with it deterministic checkpointed stream replay).  On a lost
-    # claim the compacted files are rolled back (they are in no
-    # committed manifest) minus anything the winner references.
-    try:
-        _write_atomic_excl(os.path.join(path, f"_MANIFEST.v{version}"), body)
-    except FileExistsError:
-        _rollback_shards()
-        # the marker is OURS (claimed excl above) and can only
-        # reclassify the winner's data commit if left behind — sweep it
-        try:
-            os.remove(os.path.join(path, f"_MANIFEST.v{version}.rewrite"))
-        except OSError:
-            pass
-        raise ManifestCommitConflict(
-            f"concurrent commit: _MANIFEST.v{version} was claimed by "
-            "another writer during compaction; the rewrite was rolled "
-            "back — re-plan against the new table state"
-        ) from None
-    write_stats_delta(path, version, ck_delta)
-    if _latest_manifest_version(path) == version:
-        _write_atomic(os.path.join(path, "_MANIFEST"), body)
-    return version
+    except ManifestCommitConflict:
+        _remove_unclaimed(path, base + 1, _manifest_files(new_manifest))
+        raise
 
 
 def purge_jsonl_dir(
@@ -854,10 +706,7 @@ def _subset_rewrite(
     )
     for k, v in (extra_writer_opts or {}).items():
         w = w.option(k, v)
-    from pu4spark_spark.sources.lake.checkpoint import (
-        assemble_stats,
-        write_stats_delta,
-    )
+    from pu4spark_spark.sources.lake.checkpoint import assemble_stats
 
     # preserve the subset's payload format — a rewrite must NEVER
     # downgrade data the writer opted into parquet, so ANY parquet
@@ -946,60 +795,13 @@ def _subset_rewrite(
         tombs["added"] = added
         new_manifest[TOMBSTONE_KEY] = tombs
     new_manifest[OP_KEY] = op
-    import hashlib as _hashlib
-    import time as _time
-
-    new_manifest["_ts"] = _time.time_ns()
-    body = _json.dumps(new_manifest)
-
-    def _rollback() -> None:
-        winner: set[str] = set()
-        try:
-            with open(
-                os.path.join(path, f"_MANIFEST.v{version}")
-            ) as fh:
-                winner = set(_json.load(fh))
-        except (OSError, ValueError):
-            pass
-        for f in staged:
-            if f not in winner:
-                try:
-                    os.remove(os.path.join(path, f))
-                except OSError:
-                    pass
-
     try:
-        _write_atomic_excl(
-            os.path.join(path, f"_MANIFEST.v{version}.rewrite"),
-            _hashlib.md5(body.encode()).hexdigest(),
+        return commit_manifest(
+            path, base, new_manifest, op, stage_stats, rewrite=True
         )
-    except FileExistsError:
-        _rollback()
-        raise ManifestCommitConflict(
-            f"concurrent commit: _MANIFEST.v{version}.rewrite is "
-            f"already claimed; the {op} was rolled back"
-        ) from None
-    try:
-        _write_atomic_excl(
-            os.path.join(path, f"_MANIFEST.v{version}"), body
-        )
-    except FileExistsError:
-        _rollback()
-        try:
-            os.remove(
-                os.path.join(path, f"_MANIFEST.v{version}.rewrite")
-            )
-        except OSError:
-            pass
-        raise ManifestCommitConflict(
-            f"concurrent commit: _MANIFEST.v{version} was claimed by "
-            f"another writer during {op}; the rewrite was rolled back "
-            "— re-plan against the new table state"
-        ) from None
-    write_stats_delta(path, version, stage_stats)
-    if _latest_manifest_version(path) == version:
-        _write_atomic(os.path.join(path, "_MANIFEST"), body)
-    return version
+    except ManifestCommitConflict:
+        _remove_unclaimed(path, version, staged)
+        raise
 
 
 def compact_partitions_jsonl_dir(
@@ -1268,16 +1070,10 @@ def vacuum_jsonl_dir(
                 "keep_versions": keep_versions,
                 "stale_grace_s": stale_grace_s,
             }
-            m["_ts"] = _time.time_ns()
-            body = _json.dumps(m)
             try:
-                _write_atomic_excl(
-                    os.path.join(path, f"_MANIFEST.v{base + 1}"), body
-                )
-            except FileExistsError:
+                commit_manifest(path, base, m, "vacuum")
+            except ManifestCommitConflict:
                 continue  # claim lost to a concurrent writer: re-base
-            if _latest_manifest_version(path) == base + 1:
-                _write_atomic(os.path.join(path, "_MANIFEST"), body)
             break
         # falling out after 8 lost claims is fine: the reclaim itself
         # succeeded and the history record is advisory
@@ -1309,9 +1105,6 @@ def clone_jsonl_dir(
     graft.  Vacuum on the clone only ever
     deletes files physically present in the clone's dir, so shared
     source shards are structurally out of reach.  Returns 1."""
-    import json as _json
-    import time as _time
-
     base_v = (
         version
         if version is not None
@@ -1400,28 +1193,15 @@ def clone_jsonl_dir(
         }
         # the entries' delete-key FILES also resolve via the base dir
     new_manifest[OP_KEY] = "clone"
-    new_manifest["_ts"] = _time.time_ns()
-    body = _json.dumps(new_manifest)
-    try:
-        _write_atomic_excl(os.path.join(dst, "_MANIFEST.v1"), body)
-    except FileExistsError:
-        raise ManifestCommitConflict(
-            f"concurrent commit: _MANIFEST.v1 of {dst} was claimed by "
-            "another writer during clone"
-        ) from None
     # carry the SOURCE's assembled stats view as the clone's own v1
     # delta: entries are keyed by immutable shard name, so they stay
     # valid for the shared files — and the clone starts life on the
     # pure delta+checkpoint plane (no legacy root _STATS)
-    from pu4spark_spark.sources.lake.checkpoint import (
-        assemble_stats,
-        write_stats_delta,
-    )
+    from pu4spark_spark.sources.lake.checkpoint import assemble_stats
 
-    write_stats_delta(dst, 1, assemble_stats(src))
-    if _latest_manifest_version(dst) == 1:
-        _write_atomic(os.path.join(dst, "_MANIFEST"), body)
-    return 1
+    return commit_manifest(
+        dst, 0, new_manifest, "clone", assemble_stats(src)
+    )
 
 
 def restore_jsonl_dir(
@@ -1440,9 +1220,6 @@ def restore_jsonl_dir(
     version stream raises on any unmarked ledger-shrinking commit and
     the subscriber restarts from a fresh snapshot, the same guidance
     Delta gives.  Returns the new version."""
-    import json as _json
-    import time as _time
-
     try:
         target = _manifest_at(path, to_version)
     except OSError:
@@ -1489,7 +1266,6 @@ def restore_jsonl_dir(
         if base_version is not None
         else _latest_manifest_version(path)
     )
-    version = base + 1
     new_manifest = dict(target)
     _check_features(target)  # refuse unknown table features
     # the stream sink's idempotence marker tracks the LIVE commit
@@ -1503,21 +1279,7 @@ def restore_jsonl_dir(
     # rule): union the live chain's list into the restored snapshot's
     _stamp_features(new_manifest, *cur.get(FEATURES_KEY, ()))
     new_manifest[OP_KEY] = "restore"
-    new_manifest["_ts"] = _time.time_ns()
-    body = _json.dumps(new_manifest)
-    try:
-        _write_atomic_excl(
-            os.path.join(path, f"_MANIFEST.v{version}"), body
-        )
-    except FileExistsError:
-        raise ManifestCommitConflict(
-            f"concurrent commit: _MANIFEST.v{version} was claimed by "
-            f"another writer after this restore read version {base}; "
-            "re-plan the restore against the new table state"
-        ) from None
-    if _latest_manifest_version(path) == version:
-        _write_atomic(os.path.join(path, "_MANIFEST"), body)
-    return version
+    return commit_manifest(path, base, new_manifest, "restore")
 
 
 def describe_history_jsonl_dir(
@@ -1699,7 +1461,7 @@ def widen_jsonl_column(
         f"{nm} {new_type if nm == name else t}" for nm, t in cols
     )
     new_manifest[OP_KEY] = "widen-column"
-    return _claim_metadata_commit(path, base, new_manifest, "widen")
+    return commit_manifest(path, base, new_manifest, "widen")
 
 
 def checkpoint_jsonl_dir(path: str) -> int:

@@ -3,7 +3,7 @@ atomic-rename commit primitives, tombstone ledger, commit-scoped
 schema (DDL helpers + typed cell converters), CHECK-constraint
 compilation, rewrite markers, and shallow-clone path resolution.
 Pure functions over the on-disk layout — no Spark classes, no
-jobs.  Split from sources/pydatasource.py (r12)."""
+jobs."""
 
 from __future__ import annotations
 
@@ -137,8 +137,9 @@ def _is_commit_conflict(exc: BaseException) -> bool:
     The writer's commit runs driver-side but the exception crosses the
     Py4J boundary wrapped, and the captured-exception repr() drops the
     class — so callers must match on str().  ONE place owns that
-    matching rule: the exact raised prefix ``_CONFLICT_SENTINEL``,
-    which every conflict site below embeds verbatim."""
+    matching rule: the exact raised prefix ``_CONFLICT_SENTINEL``, and
+    ONE place raises it: :func:`commit_manifest`, the claim every lake
+    commit goes through."""
     return isinstance(exc, ManifestCommitConflict) or (
         _CONFLICT_SENTINEL in str(exc)
     )
@@ -324,18 +325,7 @@ def _iter_jsonl(value, fields: tuple[str, ...] | None = None, convs=None):
     the legacy documents shape)."""
     import json
 
-    if isinstance(value, str):
-        path, drop, dv = value, None, None
-    else:
-        path = value[0]
-        drop = set(value[1])
-        for kf in value[2] if len(value) > 2 else ():
-            drop |= _load_delete_keys(kf)
-        dv = (
-            _dv_buf(value[3])
-            if len(value) > 3 and value[3]
-            else None
-        )
+    path, drop, dv = _unpack_shard_value(value)
     flds = fields or ("doc_id", "text", "lang", "source", "n_chars")
     idx = -1
     with open(path) as fh:
@@ -1151,6 +1141,92 @@ def _rewrite_marker_valid(path: str, version: int) -> bool:
     except OSError:
         return False
     return marked == digest
+
+
+def _remove_files(path: str, names) -> None:
+    """Best-effort unlink of ``names`` under ``path`` — the rollback
+    and sweep step (a file already gone is the state it wants)."""
+    for f in names:
+        try:
+            os.remove(os.path.join(path, f))
+        except OSError:
+            pass
+
+
+def _remove_unclaimed(path: str, version: int, names) -> None:
+    """Roll back staged files after losing the claim of ``version``:
+    remove every name the winner's ``_MANIFEST.v{version}`` does not
+    reference.  A manifest-less first commit seeds from a directory
+    LISTING, which may have caught our already-renamed files — never
+    delete a file the winner's (atomic, hence complete) claim names."""
+    import json
+
+    try:
+        with open(os.path.join(path, f"_MANIFEST.v{version}")) as fh:
+            winner = set(json.load(fh))
+    except (OSError, ValueError):
+        winner = set()
+    _remove_files(path, [f for f in names if f not in winner])
+
+
+def commit_manifest(
+    path: str,
+    base: int,
+    manifest: dict,
+    what: str,
+    stats: dict | None = None,
+    rewrite: bool = False,
+) -> int:
+    """Commit ``manifest`` as version ``base + 1`` — the ONE routine
+    every lake commit claims its version through.  In order:
+
+    1. stamp ``_ts`` (the TIMESTAMP AS OF key) and serialize;
+    2. with ``rewrite`` (dataChange=false commits: compaction, purge),
+       claim the ``.rewrite`` marker first — its body is the md5 of
+       the exact snapshot body, so a crash between marker and snapshot
+       leaves a marker that matches nothing
+       (:func:`_rewrite_marker_valid`); claimed create-if-absent, so
+       two racing rewrites can never clobber each other's marker;
+    3. claim ``_MANIFEST.v{base+1}`` create-if-absent (the OCC gate:
+       exactly one of N racing writers wins the link).  A lost claim
+       removes our marker and raises :class:`ManifestCommitConflict`;
+       rolling back staged files is the caller's job;
+    4. write the per-commit stats delta (no-op when empty);
+    5. flip the live ``_MANIFEST`` cache only while this commit is
+       still the latest (a stalled winner must not swing it back).
+
+    Returns the committed version."""
+    import hashlib
+    import json
+    import time
+
+    from pu4spark_spark.sources.lake.checkpoint import write_stats_delta
+
+    version = base + 1
+    snap = os.path.join(path, f"_MANIFEST.v{version}")
+    marker = snap + ".rewrite"
+    manifest["_ts"] = time.time_ns()
+    body = json.dumps(manifest)
+    try:
+        if rewrite:
+            digest = hashlib.md5(body.encode()).hexdigest()
+            _write_atomic_excl(marker, digest)
+        try:
+            _write_atomic_excl(snap, body)
+        except FileExistsError:
+            if rewrite:
+                _remove_files(path, [os.path.basename(marker)])
+            raise
+    except FileExistsError:
+        raise ManifestCommitConflict(
+            f"{_CONFLICT_SENTINEL}{version} was claimed by another writer "
+            f"after this {what} read version {base}; re-run the {what} "
+            "against the new table state"
+        ) from None
+    write_stats_delta(path, version, stats or {})
+    if _latest_manifest_version(path) == version:
+        _write_atomic(os.path.join(path, "_MANIFEST"), body)
+    return version
 
 
 #: reserved manifest key: absolute path of the SOURCE table a shallow

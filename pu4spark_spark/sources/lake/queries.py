@@ -1,7 +1,7 @@
 """Registered BATCH lake queries + DuckDB oracles: every
 ``fmt_pyds_*`` entry the driver checks, exercising the protocol
 end to end on real fixtures, plus the QUERIES/ORACLE_SQL registry
-for the whole lake.  Split from sources/pydatasource.py (r12)."""
+for the whole lake."""
 
 from __future__ import annotations
 

@@ -1,7 +1,7 @@
 """Registered STREAMING lake queries + the composed
 ``curation_lake_release`` pipeline: microbatch drains of the
 landing/version/CDF stream readers, the lake streaming sink, and
-their DuckDB oracles.  Split from sources/pydatasource.py (r12)."""
+their DuckDB oracles."""
 
 from __future__ import annotations
 

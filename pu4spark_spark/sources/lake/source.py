@@ -2,7 +2,7 @@
 ``spark.dataSource.register`` API): batch reader with pushdown +
 zonemap pruning, transactional batch writer (OCC manifest claim),
 exactly-once streaming sink, and per-session registration with
-thread pinning.  Split from sources/pydatasource.py (r12)."""
+thread pinning."""
 
 from __future__ import annotations
 
@@ -30,7 +30,6 @@ from pu4spark_spark.sources.tables import load_table
 from pu4spark_spark.sources.lake.protocol import (
     BLOOM_M_BITS,
     DOCS_DDL,
-    SHARD_EXTENSIONS,
     ManifestCommitConflict,
     _bloom_add,
     _bloom_might_contain,
@@ -63,14 +62,14 @@ from pu4spark_spark.sources.lake.protocol import (
     _tomb_sources_for,
     _tombstones_of,
     _version_as_of,
-    _write_atomic,
-    _write_atomic_excl,
+    _remove_files,
+    _remove_unclaimed,
+    commit_manifest,
 )
 from pu4spark_spark.sources.lake.checkpoint import (
     CKPT_INTERVAL_KEY,
     _maybe_auto_checkpoint,
     assemble_stats,
-    write_stats_delta,
 )
 from pu4spark_spark.sources.lake.streaming import (
     JsonlDocsChangeFeedStreamReader,
@@ -211,43 +210,41 @@ def register_pyds(spark: SparkSession) -> None:
         spark._pu4spark_pyds_registered = True
 
 
-class JsonlDocsWriter(DataSourceWriter):
-    """Executor-side JSONL shard writer with TRANSACTIONAL commit: each
-    task streams its rows to an underscore-prefixed temp shard (hidden
-    from every reader by the metadata-file convention), and only the
-    driver-side ``commit`` renames the shards named in the task commit
-    messages to their final ``part-*.jsonl`` names and writes the
-    ``_MANIFEST`` commit log.  A failed, retried, or speculatively
-    executed task therefore leaves at most an orphan ``_tmp-*`` file —
-    swept by ``commit``/``abort`` and invisible to readers either way —
-    never a duplicate visible shard (the exactly-once contract the
-    round-trip query value-checks).  ``overwrite`` mode clears the
-    target directory driver-side before the job starts."""
+def _csv_option(options, key: str) -> list[str]:
+    """A comma-list writer option as a clean name list ([] if unset)."""
+    v = options.get(key)
+    return [c.strip() for c in v.split(",") if c.strip()] if v else []
 
-    def __init__(self, options, schema, overwrite: bool) -> None:
+
+class _LakeWriter:
+    """What the batch writer and the streaming sink share: option
+    parsing, the per-task shard fan-out, the job-scoped temp sweep, the
+    driver-side publish of staged shards, and the sticky table-property
+    stamp.  The table contract a task stages under — physical column
+    keys and CHECK constraints — comes from :meth:`_task_contract`: the
+    batch writer resolves it once driver-side, the sink per task."""
+
+    #: how error messages name the writer
+    _kind = "writer"
+
+    def _parse_options(self, options, schema) -> None:
         self.path = options.get("path")
         if not self.path:
-            raise ValueError("jsonl_docs writer requires option 'path'")
+            raise ValueError(
+                f"jsonl_docs {self._kind} requires option 'path'"
+            )
         self.fields = [f.name for f in schema.fields]
-        #: the written StructType — the Arrow subclass builds its
+        #: the written StructType — the Arrow subclasses build their
         #: per-column cell converters from it (pickles with the writer)
         self._struct = schema
-        #: written shape as DDL — recorded as the table schema when an
-        #: overwrite creates a non-documents table (appends instead
-        #: carry the base manifest's _schema; evolve_jsonl_schema is
-        #: the path that CHANGES a live table's shape)
+        #: written shape as DDL — recorded as the table schema when a
+        #: commit creates a non-documents table (appends onto an
+        #: existing table carry the base manifest's _schema;
+        #: evolve_jsonl_schema is the path that CHANGES a live table's
+        #: shape)
         self.ddl = ", ".join(
             f"{f.name} {f.dataType.simpleString()}" for f in schema.fields
         )
-        self.overwrite = overwrite
-        # optimistic-concurrency declaration: "this job planned against
-        # table version N and commits N+1".  When set, commit() claims
-        # exactly v{N+1} and FAILS (ManifestCommitConflict) if another
-        # writer claimed it first — the Iceberg/Delta base-snapshot
-        # contract.  Unset → the version is derived from a fresh listing
-        # at commit time (the claim still guarantees a unique winner).
-        bv = options.get("base_version")
-        self.base_version = int(bv) if bv is not None else None
         # Hive-style partitioned write, metadata-tracked: each task
         # writes ONE shard per distinct value of the partition
         # column(s) and the commit records the values in
@@ -258,19 +255,13 @@ class JsonlDocsWriter(DataSourceWriter):
         # Iceberg position).  Callers should repartition by the
         # partition column first: per-task shard count (and open file
         # handles) is the task's value cardinality.
-        pb = options.get("partition_by")
-        self.partition_by = (
-            [c.strip() for c in pb.split(",") if c.strip()] if pb else []
-        )
+        self.partition_by = _csv_option(options, "partition_by")
         # opt-in per-shard BLOOM FILTERS (Delta's bloom filter index):
         # option("bloom_filter_columns", "a,b") builds one bitset per
         # listed column per shard, recorded under _STATS["_bloom"] —
         # point-lookup (equality/IN) pruning on columns a hash layout
         # scatters, where the min/max envelope is useless
-        bf = options.get("bloom_filter_columns")
-        self.bloom_cols = (
-            [c.strip() for c in bf.split(",") if c.strip()] if bf else []
-        )
+        self.bloom_cols = _csv_option(options, "bloom_filter_columns")
         # PAYLOAD FORMAT: option("payload_format", "parquet") stages
         # COLUMNAR shards under the same manifest/OCC/stats/tombstone
         # protocol (Delta stores parquet under its JSON log for the
@@ -296,6 +287,186 @@ class JsonlDocsWriter(DataSourceWriter):
 
             for _nm, _t in self.typed_fields:
                 _arrow_type_of_ddl(_t)
+        # AUTO-CHECKPOINT interval (Delta's delta.checkpointInterval):
+        # option("checkpoint_interval", N) records a STICKY table
+        # property — this and every later commit (either writer)
+        # checkpoints the metadata plane whenever version % N == 0,
+        # bounding the stats-delta tail every reader assembles.  0
+        # clears the property.
+        ci = options.get("checkpoint_interval")
+        self.ckpt_interval = int(ci) if ci is not None else None
+        # per-JOB token: assigned once driver-side, shared by all the
+        # job's pickled task copies.  Temp shards carry it so the
+        # orphan sweep only ever touches THIS job's leftovers — a
+        # concurrent writer's in-flight staging is invisible to us
+        # (foreign orphans from crashed jobs are vacuum's business).
+        self.job_token = _mod_uuid.uuid4().hex[:8]
+
+    def _check_written_shape(
+        self, manifest: dict, version: int, hint: str
+    ) -> None:
+        """SCHEMA ENFORCEMENT (Delta's writer check): the written shape
+        must match the table's logical schema by NAME SET — a missing
+        column silently reads back NULL, an extra one is invisible to
+        every reader until an evolve; both are almost always bugs, so
+        refuse LOUDLY before anything commits."""
+        tbl = set(_fields_of_ddl(manifest.get(SCHEMA_KEY, DOCS_DDL)))
+        if set(self.fields) != tbl:
+            missing = sorted(tbl - set(self.fields))
+            extra = sorted(set(self.fields) - tbl)
+            raise ValueError(
+                f"jsonl_docs {self._kind}: written schema does not match "
+                f"table version {version} (missing {missing or '[]'}, "
+                f"extra {extra or '[]'}) — {hint}"
+            )
+
+    def write(self, iterator) -> WriterCommitMessage:
+        # row-facing entry (kept for API parity / direct callers); the
+        # registered source serves the Arrow subclasses instead
+        return self._write_dicts(
+            {k: row[k] for k in self.fields} for row in iterator
+        )
+
+    def _write_dicts(self, dict_iter) -> WriterCommitMessage:
+        """Task body over an iterator of LOGICAL-name row dicts —
+        shared by the row and Arrow entry points of both writers."""
+        from pyspark import TaskContext
+
+        pid = TaskContext.get().partitionId()
+        os.makedirs(self.path, exist_ok=True)
+        phys, cons = self._task_contract()
+
+        def _validated(d: dict) -> dict:
+            for nm, ex, fn in cons:
+                if not fn(d):
+                    raise ValueError(
+                        f"CHECK constraint {nm!r} ({ex}) violated by "
+                        f"row {d!r} — the write fails before any commit"
+                    )
+            return d
+
+        def _sink(parts: dict | None = None) -> _ShardSink:
+            return _ShardSink(
+                self.path, self.job_token, pid, self.fields, phys, parts,
+                self.bloom_cols, self.payload, self.typed_fields,
+            )
+
+        if not self.partition_by:
+            shard = _sink()
+            for d in dict_iter:
+                shard.add(_validated(d))
+            return shard.close()
+        # partitioned write: one shard per distinct partition value
+        # seen by THIS task (callers repartition by the column, so
+        # normally one value per task)
+        shards: dict[tuple, _ShardSink] = {}
+        for d in dict_iter:
+            d = _validated(d)
+            key = tuple(d[c] for c in self.partition_by)
+            s = shards.get(key)
+            if s is None:
+                s = shards[key] = _sink(dict(zip(self.partition_by, key)))
+            s.add(d)
+        if not shards:
+            # empty task still reports itself (rows=0, no file kept)
+            return _sink().close()
+        head, *tail = [s.close() for s in shards.values()]
+        head.extra = tail
+        return head
+
+    def _sweep(self, keep: set[str]) -> None:
+        """Remove this job's temp shards other than ``keep`` (orphans
+        from failed or speculative task attempts)."""
+        prefix = f"_tmp-{self.job_token}-"
+        try:
+            names = os.listdir(self.path)
+        except OSError:
+            return
+        _remove_files(
+            self.path,
+            [f for f in names if f.startswith(prefix) and f not in keep],
+        )
+
+    def _publish(self, messages) -> tuple[dict, dict]:
+        """Driver side of staging: rename every task's temp shard to its
+        final name (still invisible — no committed manifest names it
+        yet), sweep this job's other temps, and collect the commit's
+        stats delta.  Returns ``(staged {file: rows}, stats delta)``.
+
+        Per-shard stats are committed as a PER-COMMIT DELTA
+        (``_STATS.v{N}``): this commit's own shards' entries only —
+        O(commit) metadata, with exactly one writer per version (the
+        ``_MANIFEST.v{N}`` claimant).  Readers assemble checkpoint +
+        deltas (sources/lake/checkpoint.py); every family is advisory —
+        a shard with NO entry is simply never pruned."""
+        staged: dict = {}
+        stats: dict = {}
+        keep = set()
+        for m in _flatten_commits(messages):
+            os.rename(
+                os.path.join(self.path, m.tmp),
+                os.path.join(self.path, m.file),
+            )
+            keep.add(m.tmp)
+            staged[m.file] = m.rows
+            if m.min_doc is not None:
+                stats[m.file] = [m.min_doc, m.max_doc]
+            for fam, val in (
+                ("_parts", m.parts),
+                ("_cols", m.cols),
+                ("_nulls", m.nulls),
+                ("_bloom", m.bloom),
+            ):
+                if val:
+                    stats.setdefault(fam, {})[m.file] = val
+        self._sweep(keep)
+        return staged, stats
+
+    def _stamp_table(self, manifest: dict) -> None:
+        """The sticky table properties every write commit stamps: the
+        table features a consumer must understand (parquet shards are
+        unreadable to a JSONL-only build; mapping/constraints
+        retro-stamp so older tables converge onto the declared
+        contract), and the auto-checkpoint interval (an explicit option
+        records or clears it; otherwise the base manifest's value
+        carries forward untouched)."""
+        feats = ["payload-parquet"] if self.payload == "parquet" else []
+        if MAPPING_KEY in manifest:
+            feats.append("column-mapping")
+        if CONSTRAINT_KEY in manifest:
+            feats.append("check-constraints")
+        _stamp_features(manifest, *feats)
+        if self.ckpt_interval is not None:
+            if self.ckpt_interval > 0:
+                manifest[CKPT_INTERVAL_KEY] = self.ckpt_interval
+            else:
+                manifest.pop(CKPT_INTERVAL_KEY, None)
+
+
+class JsonlDocsWriter(_LakeWriter, DataSourceWriter):
+    """Executor-side JSONL shard writer with TRANSACTIONAL commit: each
+    task streams its rows to an underscore-prefixed temp shard (hidden
+    from every reader by the metadata-file convention), and only the
+    driver-side ``commit`` renames the shards named in the task commit
+    messages to their final ``part-*.jsonl`` names and writes the
+    ``_MANIFEST`` commit log.  A failed, retried, or speculatively
+    executed task therefore leaves at most an orphan ``_tmp-*`` file —
+    swept by ``commit``/``abort`` and invisible to readers either way —
+    never a duplicate visible shard (the exactly-once contract the
+    round-trip query value-checks).  ``overwrite`` mode clears the
+    target directory driver-side before the job starts."""
+
+    def __init__(self, options, schema, overwrite: bool) -> None:
+        self._parse_options(options, schema)
+        self.overwrite = overwrite
+        # optimistic-concurrency declaration: "this job planned against
+        # table version N and commits N+1".  When set, commit() claims
+        # exactly v{N+1} and FAILS (ManifestCommitConflict) if another
+        # writer claimed it first — the Iceberg/Delta base-snapshot
+        # contract.  Unset → the version is derived from a fresh listing
+        # at commit time (the claim still guarantees a unique winner).
+        bv = options.get("base_version")
+        self.base_version = int(bv) if bv is not None else None
         # COLUMN MAPPING: an append into a mapped table must write the
         # table's PHYSICAL keys, so pre- and post-rename shards stay
         # uniform (the reader resolves one physical name per logical
@@ -304,12 +475,11 @@ class JsonlDocsWriter(DataSourceWriter):
         # carries the mapping into SIBLING-DIR staging writes
         # (merge/update staging), whose shards are destined for a
         # mapped table but whose stage dir has no manifest of its own.
-        import json as _json
-
         pm = options.get("physical_map")
+        self.phys: dict = {}
         if pm:
-            self.phys: dict = _json.loads(pm)
-        elif not overwrite and self.path and os.path.isdir(self.path):
+            self.phys = _mod_json.loads(pm)
+        elif not overwrite and os.path.isdir(self.path):
             _b = (
                 self.base_version
                 if self.base_version is not None
@@ -321,32 +491,17 @@ class JsonlDocsWriter(DataSourceWriter):
                 # requires a feature this build does not understand
                 _check_features(_bm)
                 self.phys = _mapping_of(_bm)
-                # SCHEMA ENFORCEMENT (Delta's writer check): an
-                # append's shape must match the table's logical schema
-                # by NAME SET — a missing column silently reads back
-                # NULL, an extra one is invisible to every reader
-                # until an evolve; both are almost always bugs, so
-                # refuse LOUDLY before any staging.  evolve / rename /
-                # drop / widen are the sanctioned shape-changing
-                # paths; overwrite replaces the table; staging writes
-                # (physical_map) enforce against the real table via
-                # their DML entry points.
-                tbl = set(_fields_of_ddl(_bm.get(SCHEMA_KEY, DOCS_DDL)))
-                if set(self.fields) != tbl:
-                    missing = sorted(tbl - set(self.fields))
-                    extra = sorted(set(self.fields) - tbl)
-                    raise ValueError(
-                        "jsonl_docs append: written schema does not "
-                        f"match table version {_b} (missing "
-                        f"{missing or '[]'}, extra {extra or '[]'}) — "
-                        "evolve_jsonl_schema / rename_jsonl_column / "
-                        "drop_jsonl_column change a live table's "
-                        "shape; mode('overwrite') replaces it"
-                    )
-            else:
-                self.phys = {}
-        else:
-            self.phys = {}
+                # evolve / rename / drop / widen are the sanctioned
+                # shape-changing paths; overwrite replaces the table;
+                # staging writes (physical_map) enforce against the
+                # real table via their DML entry points.
+                self._check_written_shape(
+                    _bm,
+                    _b,
+                    "evolve_jsonl_schema / rename_jsonl_column / "
+                    "drop_jsonl_column change a live table's shape; "
+                    "mode('overwrite') replaces it",
+                )
         # CHECK constraints of the base manifest, compiled driver-side
         # once and pickled to every task: each row is validated BEFORE
         # staging, so one violating row fails the job and nothing
@@ -386,22 +541,6 @@ class JsonlDocsWriter(DataSourceWriter):
                 "jsonl_docs writer: txn_app_id and txn_version must be "
                 "set together"
             )
-        # AUTO-CHECKPOINT interval (Delta's delta.checkpointInterval):
-        # option("checkpoint_interval", N) records a STICKY table
-        # property — this and every later commit (either writer)
-        # checkpoints the metadata plane whenever version % N == 0,
-        # bounding the stats-delta tail every reader assembles.  0
-        # clears the property.
-        ci = options.get("checkpoint_interval")
-        self.ckpt_interval = int(ci) if ci is not None else None
-        # per-JOB token: assigned once driver-side, shared by all the
-        # job's pickled task copies.  Temp shards carry it so commit's
-        # orphan sweep only ever touches THIS job's leftovers — a
-        # concurrent writer's in-flight staging is invisible to us
-        # (foreign orphans from crashed jobs are vacuum's business).
-        import uuid as _uuid
-
-        self.job_token = _uuid.uuid4().hex[:8]
         if overwrite:
             # runs on the driver, pre-job (the writer is constructed
             # once driver-side before being pickled to tasks)
@@ -409,112 +548,22 @@ class JsonlDocsWriter(DataSourceWriter):
 
             shutil.rmtree(self.path, ignore_errors=True)
 
-    def write(self, iterator) -> WriterCommitMessage:
-        # row-facing entry (kept for API parity / direct callers); the
-        # registered source serves the Arrow subclass below instead
-        fields = self.fields
-        return self._write_dicts(
-            {k: row[k] for k in fields} for row in iterator
-        )
-
-    def _write_dicts(self, dict_iter) -> WriterCommitMessage:
-        """Task body over an iterator of LOGICAL-name row dicts —
-        shared by the row and Arrow entry points."""
-        import os as _os
-
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        _os.makedirs(self.path, exist_ok=True)
-        phys = self.phys  # logical→physical keys at serialization
-
-        cons = self._constraints
-
-        def _validated(d: dict) -> dict:
-            for nm, ex, fn in cons:
-                if not fn(d):
-                    raise ValueError(
-                        f"CHECK constraint {nm!r} ({ex}) violated by "
-                        f"row {d!r} — the job fails before any commit"
-                    )
-            return d
-
-        bloom_cols = self.bloom_cols
-        payload, typed = self.payload, self.typed_fields
-        if not self.partition_by:
-            shard = _ShardSink(
-                self.path, self.job_token, pid, self.fields, phys, None,
-                bloom_cols, payload, typed,
-            )
-            for d in dict_iter:
-                shard.add(_validated(d))
-            return shard.close()
-        # partitioned write: one shard per distinct partition value
-        # seen by THIS task (callers repartition by the column, so
-        # normally one value per task)
-        shards: dict[tuple, _ShardSink] = {}
-        for d in dict_iter:
-            d = _validated(d)
-            key = tuple(d[c] for c in self.partition_by)
-            s = shards.get(key)
-            if s is None:
-                s = shards[key] = _ShardSink(
-                    self.path,
-                    self.job_token,
-                    pid,
-                    self.fields,
-                    phys,
-                    dict(zip(self.partition_by, key)),
-                    bloom_cols,
-                    payload,
-                    typed,
-                )
-            s.add(d)
-        if not shards:
-            # empty task still reports itself (rows=0, no file kept)
-            shard = _ShardSink(
-                self.path, self.job_token, pid, self.fields, phys, None,
-                bloom_cols, payload, typed,
-            )
-            return shard.close()
-        commits = [s.close() for s in shards.values()]
-        head, tail = commits[0], commits[1:]
-        head.extra = tail
-        return head
-
-    def _sweep_tmp(self, keep: set[str]) -> None:
-        import os as _os
-
-        prefix = f"_tmp-{self.job_token}-"
-        for f in _os.listdir(self.path):
-            if f.startswith(prefix) and f not in keep:
-                try:
-                    _os.remove(_os.path.join(self.path, f))
-                except OSError:
-                    pass
+    def _task_contract(self) -> tuple[dict, list]:
+        return self.phys, self._constraints
 
     def commit(self, messages) -> None:
-        import json as _json
-        import os as _os
-
         # the version this commit will claim is decided FIRST, because
         # it names the base snapshot the new manifest must extend
         if self.base_version is not None:
-            version = self.base_version + 1
+            base = self.base_version
+        elif os.path.isdir(self.path):
+            base = _latest_manifest_version(self.path)
         else:
-            version = 1 + max(
-                (
-                    int(f.rsplit(".v", 1)[1])
-                    for f in _os.listdir(self.path)
-                    if f.startswith("_MANIFEST.v")
-                    and f.rsplit(".v", 1)[1].isdigit()
-                ),
-                default=0,
-            ) if _os.path.isdir(self.path) else 1
+            base = 0
         # append mode commits ON TOP of the existing log: seed from the
-        # IMMUTABLE base snapshot _MANIFEST.v{version-1} — never from
-        # the live _MANIFEST pointer.  The live pointer lags a winner
-        # that has claimed its version but not yet flipped (or crashed
+        # IMMUTABLE base snapshot _MANIFEST.v{base} — never from the
+        # live _MANIFEST pointer.  The live pointer lags a winner that
+        # has claimed its version but not yet flipped (or crashed
         # between the two); seeding from it would silently drop that
         # committed winner's shards from every later version — exactly
         # the lost-update the version claim exists to prevent.  The
@@ -525,35 +574,19 @@ class JsonlDocsWriter(DataSourceWriter):
         # its own.
         manifest = {}
         if not self.overwrite:
-            base_snap = _os.path.join(
-                self.path, f"_MANIFEST.v{version - 1}"
-            )
-            mpath = _os.path.join(self.path, "_MANIFEST")
-            if version > 1 and _os.path.exists(base_snap):
+            base_snap = os.path.join(self.path, f"_MANIFEST.v{base}")
+            mpath = os.path.join(self.path, "_MANIFEST")
+            if base > 0 and os.path.exists(base_snap):
                 with open(base_snap) as fh:
-                    manifest = _json.load(fh)
-            elif _os.path.exists(mpath):
+                    manifest = _mod_json.load(fh)
+            elif os.path.exists(mpath):
                 with open(mpath) as fh:
-                    manifest = _json.load(fh)
-            elif _os.path.isdir(self.path):
-                # same extension set the reader's listing fallback scans
-                for f in _os.listdir(self.path):
-                    if f.endswith(SHARD_EXTENSIONS) and not f.startswith(
-                        (".", "_")
-                    ):
-                        # row count unknown without a scan; None marks
-                        # "listed, not counted" (readers only use keys)
-                        manifest[f] = None
-        # per-shard stats are committed as a PER-COMMIT DELTA
-        # (_STATS.v{N}, r15): this commit's own shards' entries only —
-        # O(commit) metadata, never the r14 O(table) read-modify-
-        # rewrite of one root _STATS (which also let racing writers
-        # lose each other's entries; a version-keyed delta has exactly
-        # one writer, the _MANIFEST.v{N} claimant).  Readers assemble
-        # checkpoint + deltas (sources/lake/checkpoint.py); a shard
-        # with NO entry is simply never pruned — partial stats stay
-        # advisory and safe.
-        stats: dict = {}
+                    manifest = _mod_json.load(fh)
+            elif os.path.isdir(self.path):
+                # same extension set the reader's listing fallback scans;
+                # row count unknown without a scan: None marks "listed,
+                # not counted" (readers only use keys)
+                manifest = dict.fromkeys(_list_shards(self.path))
         # an append whose seeded base is EMPTY (fresh dir: no prior
         # commit, no listed legacy shards) CREATES the table — decided
         # before our own shards are merged in below
@@ -573,38 +606,17 @@ class JsonlDocsWriter(DataSourceWriter):
                 .get(self.txn_app_id, -1)
             )
             if recorded >= self.txn_version:
-                self._sweep_tmp(set())
+                self._sweep(set())
                 return
-        committed_tmp = set()
-        for m in _flatten_commits(messages):
-            _os.rename(
-                _os.path.join(self.path, m.tmp),
-                _os.path.join(self.path, m.file),
+        staged, stats = self._publish(messages)
+        manifest.update(staged)
+        if TOMBSTONE_KEY in manifest:
+            # a table with delete history tracks each shard's add
+            # version so tombstone entries (scoped "v > added") never
+            # apply to rows committed after them
+            manifest[TOMBSTONE_KEY].setdefault("added", {}).update(
+                dict.fromkeys(staged, base + 1)
             )
-            committed_tmp.add(m.tmp)
-            manifest[m.file] = m.rows
-            if TOMBSTONE_KEY in manifest:
-                # a table with delete history tracks each shard's add
-                # version so tombstone entries (scoped "v > added")
-                # never apply to rows committed after them
-                manifest[TOMBSTONE_KEY].setdefault("added", {})[
-                    m.file
-                ] = version
-            if getattr(m, "min_doc", None) is not None:
-                stats[m.file] = [m.min_doc, m.max_doc]
-            if getattr(m, "parts", None):
-                # partition values per shard — advisory like the
-                # zonemap: a shard without an entry is never pruned
-                stats.setdefault("_parts", {})[m.file] = m.parts
-            if getattr(m, "cols", None):
-                # multi-column zonemap — advisory, same contract
-                stats.setdefault("_cols", {})[m.file] = m.cols
-            if getattr(m, "nulls", None):
-                # null counts (IsNull/IsNotNull pruning) — advisory
-                stats.setdefault("_nulls", {})[m.file] = m.nulls
-            if getattr(m, "bloom", None):
-                # opt-in bloom filters (point-lookup pruning) — advisory
-                stats.setdefault("_bloom", {})[m.file] = m.bloom
         if self.ddl != DOCS_DDL and (self.overwrite or creates_table):
             # overwrite REPLACES the table; a first append into a
             # fresh dir CREATES it — record the written shape either
@@ -613,113 +625,29 @@ class JsonlDocsWriter(DataSourceWriter):
             manifest[SCHEMA_KEY] = self.ddl
         # operation provenance (DESCRIBE HISTORY): each commit records
         # its own op, overwriting whatever the base carried
-        manifest[OP_KEY] = "overwrite" if self.overwrite else "append"
+        op = manifest[OP_KEY] = "overwrite" if self.overwrite else "append"
         if self.txn_app_id is not None:
             txn = dict(manifest.get(TXN_KEY, {}))
             apps = dict(txn.get("apps", {}))
             apps[self.txn_app_id] = self.txn_version
             txn["apps"] = apps
             manifest[TXN_KEY] = txn
-        # table-features stamp: sticky declarations of what a consumer
-        # must understand (parquet shards are unreadable to a
-        # JSONL-only build; mapping/constraints retro-stamp so older
-        # tables converge onto the declared contract)
-        feats = ["payload-parquet"] if self.payload == "parquet" else []
-        if MAPPING_KEY in manifest:
-            feats.append("column-mapping")
-        if CONSTRAINT_KEY in manifest:
-            feats.append("check-constraints")
-        _stamp_features(manifest, *feats)
-        # sticky auto-checkpoint property (Delta's checkpointInterval):
-        # an explicit option records/clears it; otherwise the base
-        # manifest's value carries forward untouched (it is already in
-        # the seeded manifest)
-        if self.ckpt_interval is not None:
-            if self.ckpt_interval > 0:
-                manifest[CKPT_INTERVAL_KEY] = self.ckpt_interval
-            else:
-                manifest.pop(CKPT_INTERVAL_KEY, None)
-        # commit wall-clock (ns) — the "TIMESTAMP AS OF" resolution key
-        # (reserved key, skipped by every shard-list consumer)
-        import time as _time
-
-        manifest["_ts"] = _time.time_ns()
-        # orphans from failed/speculative task attempts
-        self._sweep_tmp(committed_tmp)
-        # versioned commit log (time travel's minimal form): every
-        # commit also snapshots the full shard list as _MANIFEST.v{N}
-        # (the version claimed above, before the base snapshot was
-        # read).  Shards are immutable and appends never delete, so
-        # reading an old version's list IS the table as of that commit.
-        # metadata commits use the same rename pattern as the shards: a
-        # crash mid-write (or a concurrent reader) must never observe a
-        # truncated _MANIFEST / _MANIFEST.v{N} / _STATS — os.replace is
-        # atomic on POSIX, so readers see either the old file or the new
-        # one, never a partial body.  Order matters: the snapshot first
-        # (time travel), then _STATS, then _MANIFEST last — the live
-        # pointer only flips once everything it references is durable.
-        #
-        # OPTIMISTIC CONCURRENCY: the version snapshot is claimed with
-        # CREATE-IF-ABSENT (hard link, which fails on an existing name)
-        # — two writers that both prepared v{N} race to that one atomic
-        # filesystem operation, exactly one wins, and the loser raises
-        # ManifestCommitConflict after unlinking its own shards.  The
-        # live _MANIFEST / _STATS are only ever flipped by the winner,
-        # so a conflict can never produce a silent shard-list merge.
-        body = _json.dumps(manifest)
+        self._stamp_table(manifest)
+        # OPTIMISTIC CONCURRENCY: the version snapshot is claimed
+        # create-if-absent (commit_manifest) — two writers that both
+        # prepared v{N} race to one atomic link, exactly one wins, and
+        # the loser unlinks its own shards and re-raises.  The live
+        # _MANIFEST is only ever flipped by the winner, so a conflict
+        # can never produce a silent shard-list merge.
         try:
-            _write_atomic_excl(
-                _os.path.join(self.path, f"_MANIFEST.v{version}"), body
-            )
-        except FileExistsError:
-            # another writer committed this version first: roll back our
-            # shard visibility (manifest-preferring readers never saw
-            # them — they are in no committed manifest) and fail loudly.
-            # Exception: on a manifest-less first commit the winner seeds
-            # its manifest from a directory LISTING, which may have
-            # caught our already-renamed shards — never delete a file
-            # the winner's (atomic, hence complete) claim references.
-            winner_files: set[str] = set()
-            try:
-                with open(
-                    _os.path.join(self.path, f"_MANIFEST.v{version}")
-                ) as fh:
-                    winner_files = set(_json.load(fh))
-            except (OSError, ValueError):
-                pass
-            for m in _flatten_commits(messages):
-                if m.file in winner_files:
-                    continue
-                try:
-                    _os.remove(_os.path.join(self.path, m.file))
-                except OSError:
-                    pass
-            raise ManifestCommitConflict(
-                f"concurrent commit: _MANIFEST.v{version} was claimed by "
-                f"another writer after this job read version {version - 1}; "
-                "this job's shards were rolled back — re-run the append "
-                "against the new table state"
-            ) from None
-        # stats delta rides the won claim: version-keyed, exactly one
-        # writer, written even when a newer version already landed
-        # (assembly merges every delta; a crash before this write only
-        # loses pruning for our shards — advisory)
-        write_stats_delta(self.path, version, stats)
-        # the live _MANIFEST is a CACHE: unpinned readers resolve the
-        # highest _MANIFEST.v{N} first (JsonlDocsReader._resolve), so
-        # correctness never depends on this pointer.  Still, only flip
-        # it while this commit is the latest — a winner that claimed
-        # v{N} then stalled while others committed v{N+1..} must not
-        # swing the cache (and legacy consumers of it) backwards.
-        if _latest_manifest_version(self.path) == version:
-            _write_atomic(_os.path.join(self.path, "_MANIFEST"), body)
+            version = commit_manifest(self.path, base, manifest, op, stats)
+        except ManifestCommitConflict:
+            _remove_unclaimed(self.path, base + 1, staged)
+            raise
         _maybe_auto_checkpoint(self.path, version, manifest)
 
     def abort(self, messages) -> None:
-        import os as _os
-
-        if _os.path.isdir(self.path):
-            self._sweep_tmp(set())
+        self._sweep(set())
 
 
 def _arrow_batches_to_dicts(iterator, struct):
@@ -1043,7 +971,7 @@ def _flatten_commits(messages):
             yield e
 
 
-class JsonlDocsStreamWriter(DataSourceStreamWriter):
+class JsonlDocsStreamWriter(_LakeWriter, DataSourceStreamWriter):
     """STREAMING SINK INTO THE MINI-LAKE — the fourth quadrant of the
     connector matrix (batch read/write and the two stream readers are
     the other three): every micro-batch lands as one manifest commit
@@ -1066,81 +994,12 @@ class JsonlDocsStreamWriter(DataSourceStreamWriter):
     one driver claim); state carried between batches is ONE integer
     in the manifest."""
 
+    _kind = "stream sink"
+
     def __init__(self, options, schema) -> None:
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("jsonl_docs stream writer requires 'path'")
-        self.fields = [f.name for f in schema.fields]
-        #: written StructType — the Arrow subclass's converter source
-        self._struct = schema
-        #: written shape as DDL — recorded as the table schema when the
-        #: FIRST commit into a fresh directory creates a non-documents
-        #: table (mirrors the batch writer's overwrite path; appends
-        #: onto an existing table keep the base manifest's _schema)
-        self.ddl = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}" for f in schema.fields
-        )
-        # metadata-tracked PARTITIONED sink — same contract as the
-        # batch writer's option: each task writes one shard per
-        # distinct partition value it sees, commit() records the
-        # values under _STATS["_parts"] so the reader prunes whole
-        # shards on partition-column equality/IN filters.  The hourly
-        # partitioned-ingest shape at 100 TB: callers partition the
-        # stream by the column (or accept one shard per value per
-        # task).
-        pb = options.get("partition_by")
-        self.partition_by = (
-            [c.strip() for c in pb.split(",") if c.strip()] if pb else []
-        )
-        # opt-in per-shard bloom filters — same option and recording
-        # as the batch writer
-        bf = options.get("bloom_filter_columns")
-        self.bloom_cols = (
-            [c.strip() for c in bf.split(",") if c.strip()] if bf else []
-        )
-        # columnar payload — same option and contract as the batch
-        # writer (the streaming-ingest-into-parquet shape at 100 TB)
-        pfmt = options.get("payload_format", "jsonl").lower()
-        if pfmt not in ("jsonl", "parquet"):
-            raise ValueError(
-                "jsonl_docs: payload_format must be 'jsonl' or "
-                f"'parquet', got {pfmt!r}"
-            )
-        self.payload = pfmt
-        self.typed_fields = [
-            (f.name, f.dataType.simpleString()) for f in schema.fields
-        ]
-        if pfmt == "parquet":
-            from pu4spark_spark.sources.lake.protocol import (
-                _arrow_type_of_ddl,
-            )
+        self._parse_options(options, schema)
 
-            for _nm, _t in self.typed_fields:
-                _arrow_type_of_ddl(_t)
-        # sticky auto-checkpoint interval — same option and property
-        # as the batch writer (the MANY-commit shape where bounding
-        # the delta tail matters most)
-        ci = options.get("checkpoint_interval")
-        self.ckpt_interval = int(ci) if ci is not None else None
-        import uuid as _uuid
-
-        self.job_token = _uuid.uuid4().hex[:8]
-
-    def write(self, iterator) -> WriterCommitMessage:
-        # row-facing entry (kept for direct callers — see the batch
-        # writer); the registered source serves the Arrow subclass
-        fields = self.fields
-        return self._write_dicts(
-            {k: row[k] for k in fields} for row in iterator
-        )
-
-    def _write_dicts(self, dict_iter) -> WriterCommitMessage:
-        import os as _os
-
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        _os.makedirs(self.path, exist_ok=True)
+    def _task_contract(self) -> tuple[dict, list]:
         # CHECK constraints AND column mapping, loaded lazily per TASK
         # from the current latest manifest (a stream is long-lived — a
         # constraint or rename committed mid-stream must bind future
@@ -1150,105 +1009,26 @@ class JsonlDocsStreamWriter(DataSourceStreamWriter):
         # rename_jsonl_column the mapped column's PHYSICAL JSON key is
         # its original name — serializing logical keys would make every
         # sink-committed row read back NULL under the mapped column.
-        # Rows are validated / stat'd under LOGICAL names (like the
-        # batch writer); only the serialized form is physical — the
-        # shared :class:`_ShardSink` owns that plus every _STATS
-        # statistic.
-        cons = []
-        phys: dict = {}
         latest = _latest_manifest_version(self.path)
-        if latest > 0:
-            _m = _manifest_at(self.path, latest)
-            for nm, ex in _constraints_of(_m).items():
-                cons.append((nm, ex, _compile_constraint(ex)))
-            phys = _mapping_of(_m)
-            # SCHEMA ENFORCEMENT, per batch (the table can evolve
-            # mid-stream): same name-set rule as the batch writer —
-            # a shape mismatch fails the micro-batch loudly before
-            # any staging instead of silently landing rows that read
-            # back NULL under the table's columns
-            tbl = set(_fields_of_ddl(_m.get(SCHEMA_KEY, DOCS_DDL)))
-            if set(self.fields) != tbl:
-                missing = sorted(tbl - set(self.fields))
-                extra = sorted(set(self.fields) - tbl)
-                raise ValueError(
-                    "jsonl_docs stream sink: written schema does not "
-                    f"match table version {latest} (missing "
-                    f"{missing or '[]'}, extra {extra or '[]'}) — "
-                    "restart the stream with the table's current "
-                    "shape (evolve_jsonl_schema is the sanctioned "
-                    "shape-changing path)"
-                )
-
-        def _validated(d: dict) -> dict:
-            for nm, ex, fn in cons:
-                if not fn(d):
-                    raise ValueError(
-                        f"CHECK constraint {nm!r} ({ex}) violated "
-                        f"by row {d!r} — the micro-batch fails "
-                        "before any commit"
-                    )
-            return d
-
-        bloom_cols = self.bloom_cols
-        payload, typed = self.payload, self.typed_fields
-        if not self.partition_by:
-            shard = _ShardSink(
-                self.path, self.job_token, pid, self.fields, phys, None,
-                bloom_cols, payload, typed,
-            )
-            for d in dict_iter:
-                shard.add(_validated(d))
-            return shard.close()
-        shards: dict[tuple, _ShardSink] = {}
-        for d in dict_iter:
-            d = _validated(d)
-            key = tuple(d[c] for c in self.partition_by)
-            s = shards.get(key)
-            if s is None:
-                s = shards[key] = _ShardSink(
-                    self.path,
-                    self.job_token,
-                    pid,
-                    self.fields,
-                    phys,
-                    dict(zip(self.partition_by, key)),
-                    bloom_cols,
-                    payload,
-                    typed,
-                )
-            s.add(d)
-        if not shards:
-            # empty task still reports itself (rows=0)
-            shard = _ShardSink(
-                self.path, self.job_token, pid, self.fields, phys, None,
-                bloom_cols, payload, typed,
-            )
-            return shard.close()
-        commits = [s.close() for s in shards.values()]
-        head, tail = commits[0], commits[1:]
-        head.extra = tail
-        return head
-
-    def _sweep(self, keep: set[str]) -> None:
-        import os as _os
-
-        prefix = f"_tmp-{self.job_token}-"
-        try:
-            names = _os.listdir(self.path)
-        except OSError:
-            return
-        for f in names:
-            if f.startswith(prefix) and f not in keep:
-                try:
-                    _os.remove(_os.path.join(self.path, f))
-                except OSError:
-                    pass
+        if latest <= 0:
+            return {}, []
+        m = _manifest_at(self.path, latest)
+        # schema enforcement per batch (the table can evolve
+        # mid-stream): a shape mismatch fails the micro-batch before
+        # any staging
+        self._check_written_shape(
+            m,
+            latest,
+            "restart the stream with the table's current shape "
+            "(evolve_jsonl_schema is the sanctioned shape-changing path)",
+        )
+        cons = [
+            (nm, ex, _compile_constraint(ex))
+            for nm, ex in _constraints_of(m).items()
+        ]
+        return _mapping_of(m), cons
 
     def commit(self, messages, batchId: int) -> None:
-        import json as _json
-        import os as _os
-
         latest = _latest_manifest_version(self.path)
         last = (
             _manifest_at(self.path, latest).get(TXN_KEY, {})
@@ -1260,42 +1040,23 @@ class JsonlDocsStreamWriter(DataSourceStreamWriter):
             # retried micro-batch: already durably committed — no-op
             self._sweep(set())
             return
-        staged: dict[str, int] = {}
-        stats_new: dict[str, list] = {}
-        cols_new: dict[str, dict] = {}
-        nulls_new: dict[str, dict] = {}
-        parts_new: dict[str, dict] = {}
-        bloom_new: dict[str, dict] = {}
-        committed_tmp = set()
-        # a partitioned sink task packs secondary shards into .extra
-        # (one API message per task) — flatten like the batch commit
-        for m in _flatten_commits(messages):
-            _os.rename(
-                _os.path.join(self.path, m.tmp),
-                _os.path.join(self.path, m.file),
-            )
-            committed_tmp.add(m.tmp)
-            staged[m.file] = m.rows
-            if getattr(m, "min_doc", None) is not None:
-                stats_new[m.file] = [m.min_doc, m.max_doc]
-            if getattr(m, "cols", None):
-                cols_new[m.file] = m.cols
-            if getattr(m, "nulls", None):
-                nulls_new[m.file] = m.nulls
-            if getattr(m, "parts", None):
-                parts_new[m.file] = m.parts
-            if getattr(m, "bloom", None):
-                bloom_new[m.file] = m.bloom
-        self._sweep(committed_tmp)
+        staged, stats = self._publish(messages)
+
+        def _roll_back() -> None:
+            # staged shards carry final names but are in no committed
+            # manifest — remove them
+            _remove_files(self.path, staged)
+            self._sweep(set())
+
         # metadata-only claim loop: staged shards are invisible until a
         # manifest references them, so losing a claim to a concurrent
         # batch appender just means re-claiming against the new base.
         # Bounded: a pathologically hot table must fail the batch
         # loudly (the engine retries it; _txn makes that safe), not
         # spin the driver forever.
+        lost: ManifestCommitConflict | None = None
         for _attempt in range(64):
             base = _latest_manifest_version(self.path)
-            version = base + 1
             manifest = dict(_manifest_at(self.path, base))
             _check_features(manifest)  # refuse unknown table features
             # re-check _txn against the REFRESHED base: a zombie /
@@ -1305,15 +1066,9 @@ class JsonlDocsStreamWriter(DataSourceStreamWriter):
             # next version would land the batch's shards TWICE.  The
             # idempotence test must ride every claim attempt, not just
             # the first read (the Delta txn check is part of the commit
-            # transaction for the same reason).  Our staged shards are
-            # in no committed manifest — remove them and no-op.
+            # transaction for the same reason).
             if manifest.get(TXN_KEY, {}).get("last_batch", -1) >= batchId:
-                for f in staged:
-                    try:
-                        _os.remove(_os.path.join(self.path, f))
-                    except OSError:
-                        pass
-                self._sweep(set())
+                _roll_back()
                 return
             # the schema check in write() ran against whatever was
             # latest at STAGING time; the claim races against live
@@ -1322,29 +1077,20 @@ class JsonlDocsStreamWriter(DataSourceStreamWriter):
             # onto someone else's table must not silently land rows
             # that read back NULL under that table's columns
             if base > 0:
-                tbl = set(
-                    _fields_of_ddl(manifest.get(SCHEMA_KEY, DOCS_DDL))
-                )
-                if set(self.fields) != tbl:
-                    # staged shards already carry final names but are
-                    # in no committed manifest — roll them back
-                    for f in staged:
-                        try:
-                            _os.remove(_os.path.join(self.path, f))
-                        except OSError:
-                            pass
-                    self._sweep(set())
-                    raise ValueError(
-                        "jsonl_docs stream sink: written schema does "
-                        f"not match table version {base} (table "
-                        f"{sorted(tbl)}, written {sorted(self.fields)})"
-                        " — the table changed shape between staging "
-                        "and commit; restart the stream"
+                try:
+                    self._check_written_shape(
+                        manifest,
+                        base,
+                        "the table changed shape between staging and "
+                        "commit; restart the stream",
                     )
+                except ValueError:
+                    _roll_back()
+                    raise
             if TOMBSTONE_KEY in manifest:
-                added = manifest[TOMBSTONE_KEY].setdefault("added", {})
-                for f in staged:
-                    added[f] = version
+                manifest[TOMBSTONE_KEY].setdefault("added", {}).update(
+                    dict.fromkeys(staged, base + 1)
+                )
             manifest.update(staged)
             if SCHEMA_KEY not in manifest and self.ddl != DOCS_DDL:
                 # a base without a recorded schema means this commit
@@ -1357,54 +1103,17 @@ class JsonlDocsStreamWriter(DataSourceStreamWriter):
                 manifest[SCHEMA_KEY] = self.ddl
             manifest[TXN_KEY] = {"last_batch": batchId}
             manifest[OP_KEY] = "streaming-append"
-            if self.ckpt_interval is not None:
-                if self.ckpt_interval > 0:
-                    manifest[CKPT_INTERVAL_KEY] = self.ckpt_interval
-                else:
-                    manifest.pop(CKPT_INTERVAL_KEY, None)
-            feats = (
-                ["payload-parquet"] if self.payload == "parquet" else []
-            )
-            if MAPPING_KEY in manifest:
-                feats.append("column-mapping")
-            if CONSTRAINT_KEY in manifest:
-                feats.append("check-constraints")
-            _stamp_features(manifest, *feats)
-            import time as _time
-
-            manifest["_ts"] = _time.time_ns()
-            body = _json.dumps(manifest)
+            self._stamp_table(manifest)
             try:
-                _write_atomic_excl(
-                    _os.path.join(self.path, f"_MANIFEST.v{version}"),
-                    body,
+                version = commit_manifest(
+                    self.path, base, manifest, "streaming append", stats
                 )
-            except FileExistsError:
+            except ManifestCommitConflict as exc:
+                lost = exc
                 continue
-            break
-        else:
-            raise ManifestCommitConflict(
-                f"concurrent commit: _MANIFEST.v claims lost 64 times "
-                f"for streaming batch {batchId} under {self.path} — "
-                "contention is pathological; the engine will retry "
-                "the batch"
-            )
-        # per-commit stats delta (r15): the micro-batch's own shards
-        # only — O(batch) metadata per trigger, and no root-_STATS
-        # read-modify-rewrite racing the batch writers
-        delta = dict(stats_new)
-        if cols_new:
-            delta["_cols"] = cols_new
-        if nulls_new:
-            delta["_nulls"] = nulls_new
-        if parts_new:
-            delta["_parts"] = parts_new
-        if bloom_new:
-            delta["_bloom"] = bloom_new
-        write_stats_delta(self.path, version, delta)
-        if _latest_manifest_version(self.path) == version:
-            _write_atomic(_os.path.join(self.path, "_MANIFEST"), body)
-        _maybe_auto_checkpoint(self.path, version, manifest)
+            _maybe_auto_checkpoint(self.path, version, manifest)
+            return
+        raise lost
 
     def abort(self, messages, batchId: int) -> None:
         self._sweep(set())

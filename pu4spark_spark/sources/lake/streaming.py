@@ -1,7 +1,6 @@
 """Streaming READERS over the mini-lake: landing-directory
 file feed, version stream (commit walk with rewrite skip +
-tombstone union), and the typed change-data-feed stream.  Split
-from sources/pydatasource.py (r12)."""
+tombstone union), and the typed change-data-feed stream."""
 
 from __future__ import annotations
 

@@ -1942,11 +1942,12 @@ def test_stream_sink_zombie_instance_rechecks_txn_in_claim_loop(
     # batch 1 lands between the zombie's pre-loop check and its claim
     zombie = P.JsonlDocsStreamWriter({"path": out}, schema)
     zmsg = stage(zombie, [2, 3], 1)
-    # patch the DEFINING-USE module (lake.source binds the name at
-    # import): the shim's copy is not what the writer calls
-    from pu4spark_spark.sources.lake import source as _lsrc
+    # patch the DEFINING-USE module (every version claim runs in
+    # lake.protocol's commit_manifest): the shim's copy is not what
+    # the writer calls
+    from pu4spark_spark.sources.lake import protocol as _lproto
 
-    orig_excl = _lsrc._write_atomic_excl
+    orig_excl = _lproto._write_atomic_excl
     fired = {"n": 0}
 
     def rival_first(path, body):
@@ -1957,11 +1958,11 @@ def test_stream_sink_zombie_instance_rechecks_txn_in_claim_loop(
             live.commit([w_live], batchId=1)  # rival wins v2
         return orig_excl(path, body)
 
-    _lsrc._write_atomic_excl = rival_first
+    _lproto._write_atomic_excl = rival_first
     try:
         zombie.commit([zmsg], batchId=1)  # must no-op, not claim v3
     finally:
-        _lsrc._write_atomic_excl = orig_excl
+        _lproto._write_atomic_excl = orig_excl
     assert P._latest_manifest_version(out) == 2, (
         "zombie re-claimed a version for an already-committed batch"
     )
@@ -2220,12 +2221,12 @@ def test_merge_clauses_occ_race_fails_loudly(spark, tmp_path):
     ).save()
 
     rival = df([(50, "rival", "en", "s", 5)]).repartition(1)
-    # patch the DEFINING-USE module (lake.dml binds the name at
-    # import); the rival append commits through lake.source, which is
-    # never patched, so no restore dance is needed around it
-    from pu4spark_spark.sources.lake import dml as _ldml
+    # patch the DEFINING-USE module (every version claim runs in
+    # lake.protocol's commit_manifest); the rival append claims through
+    # the same patched name, so fire exactly once
+    from pu4spark_spark.sources.lake import protocol as _lproto
 
-    orig_excl = _ldml._write_atomic_excl
+    orig_excl = _lproto._write_atomic_excl
     fired = {"n": 0}
 
     def rival_first(path, body):
@@ -2240,7 +2241,7 @@ def test_merge_clauses_occ_race_fails_loudly(spark, tmp_path):
             )  # rival wins v2
         return orig_excl(path, body)
 
-    _ldml._write_atomic_excl = rival_first
+    _lproto._write_atomic_excl = rival_first
     try:
         with _pytest.raises(Exception, match="re-run the merge"):
             P.merge_into_jsonl_dir(
@@ -2252,7 +2253,7 @@ def test_merge_clauses_occ_race_fails_loudly(spark, tmp_path):
                 when_not_matched_insert=False,  # clause path
             )
     finally:
-        _ldml._write_atomic_excl = orig_excl
+        _lproto._write_atomic_excl = orig_excl
 
     # rolled back: table = base + rival only, no stray staged/key files
     m2 = P._manifest_at(out, 2)
@@ -3851,7 +3852,8 @@ def test_update_jsonl_dir_semantics_and_occ(spark, tmp_path):
     import pytest as _pytest
 
     from pu4spark_spark.sources import pydatasource as P
-    from pu4spark_spark.sources.lake import dml as _ldml
+    # every version claim runs in lake.protocol's commit_manifest
+    from pu4spark_spark.sources.lake import protocol as _lproto
 
     P.register_pyds(spark)
     out = str(tmp_path / "upd")
@@ -3888,7 +3890,7 @@ def test_update_jsonl_dir_semantics_and_occ(spark, tmp_path):
 
     # OCC: rival append claims v3 between the update's scan and claim
     rival = df([(50, 5)]).repartition(1)
-    orig_excl = _ldml._write_atomic_excl
+    orig_excl = _lproto._write_atomic_excl
     fired = {"n": 0}
 
     def rival_first(path, body):
@@ -3903,12 +3905,12 @@ def test_update_jsonl_dir_semantics_and_occ(spark, tmp_path):
             )
         return orig_excl(path, body)
 
-    _ldml._write_atomic_excl = rival_first
+    _lproto._write_atomic_excl = rival_first
     try:
         with _pytest.raises(Exception, match="re-run the merge"):
             P.update_jsonl_dir(spark, out, {"n_chars": "0"}, "doc_id = 0")
     finally:
-        _ldml._write_atomic_excl = orig_excl
+        _lproto._write_atomic_excl = orig_excl
     # rival's row intact, update rolled back
     got = {
         r["doc_id"]: r["n_chars"]

@@ -882,3 +882,32 @@ def test_bloom_filter_join_witnessed(spark):
     rows = df.collect()
     assert rows and all(r["n_items"] > 0 for r in rows)
     df.unpersist()
+
+
+def test_release_cached_logs_a_failed_unpersist(caplog, monkeypatch):
+    """``release_cached`` stays non-fatal but no longer hides a failed
+    unpersist: the failure is logged with its exception, and the other
+    pinned frames are still released."""
+    import logging
+
+    from pu4spark_spark import plans
+
+    class _Frame:
+        def __init__(self, fail: bool) -> None:
+            self.fail, self.released = fail, False
+
+        def unpersist(self) -> None:
+            if self.fail:
+                raise RuntimeError("block manager gone")
+            self.released = True
+
+    ok, bad = _Frame(False), _Frame(True)
+    monkeypatch.setattr(plans, "_RELEASABLE", [ok, bad])
+    with caplog.at_level(logging.WARNING, logger="pu4spark_spark.plans"):
+        plans.release_cached()
+    assert plans._RELEASABLE == [] and ok.released
+    assert any(
+        "RuntimeError" in r.getMessage()
+        and "block manager gone" in r.getMessage()
+        for r in caplog.records
+    )

@@ -25,7 +25,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pu4spark_spark.session import get_spark  # noqa: E402
-from pu4spark_spark.sources import pydatasource as P  # noqa: E402
+from pu4spark_spark.sources.lake.source import register_pyds  # noqa: E402
 
 N_VALUE_COLS = 24
 
@@ -34,7 +34,7 @@ def main() -> None:
     rows = int(sys.argv[1]) if len(sys.argv) > 1 else 200_000
     spark = get_spark(app_name="payload_bench")
     spark.sparkContext.setLogLevel("ERROR")
-    P.register_pyds(spark)
+    register_pyds(spark)
     base = tempfile.mkdtemp(prefix="pu4spark_payload_bench_")
     cols = [
         f"cast(id * {j + 3} % 1000 as bigint) as c{j}"
